@@ -1,0 +1,27 @@
+package perfbench
+
+/** Minimal JSON writer for the run's result and span files. */
+object Json {
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Number => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  def write(path: String, v: Any): Unit = Main.writeText(path, render(v))
+}
