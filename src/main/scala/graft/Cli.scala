@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.etl.FhirEtl
 import graft.operators.{Barcodes, Receiving}
@@ -33,8 +34,10 @@ object Cli {
   private def session(): SparkSession = {
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
+      // one shuffle partition per core `local[*]` gets, unless told otherwise
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        sys.env.getOrElse("SPARK_GRAFT_CPUS",
+          Runtime.getRuntime.availableProcessors.toString))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -127,17 +130,10 @@ object Cli {
     */
   def etlFhir(spark: SparkSession, feedDir: String, identDir: String,
       samplesDir: String, outDir: String, dryRun: Boolean): Unit = {
-    import spark.implicits._
-    val feed = spark.read.parquet(feedDir)
+    val feed = readFeed(spark, feedDir)
     val pending = Receiving.unprocessed(feed, FhirEtl.EtlName, FhirEtl.Revision)
-    val idents =
-      if (identDir == "-") Seq.empty[(String, String, String)]
-        .toDF("barcode", "uuid", "set_name")
-      else spark.read.parquet(identDir)
-    val samples =
-      if (samplesDir == "-") Seq.empty[(String, String)]
-        .toDF("identifier", "collection_identifier")
-      else spark.read.parquet(samplesDir)
+    val idents = readOrEmpty(spark, identDir, IdentifierSchema)
+    val samples = readOrEmpty(spark, samplesDir, SampleKeySchema)
     val delta = FhirEtl.decompose(pending, idents, samples)
     Seq("sites" -> delta.sites, "individuals" -> delta.individuals,
       "encounters" -> delta.encounters,
@@ -146,12 +142,13 @@ object Cli {
       "statuses" -> delta.statuses)
       .foreach { case (name, df) =>
         Receiving.snapshotSwap(df, s"$outDir/$name", dryRun) }
-    val ok = delta.statuses.filter(col("status") === "processed").select("id")
-    val bad = delta.statuses.filter(col("status") =!= "processed").select("id")
-    val marked = Receiving.markSkipped(
-      Receiving.markProcessed(feed, ok, FhirEtl.EtlName, FhirEtl.Revision),
-      bad, FhirEtl.EtlName, FhirEtl.Revision)
-    Receiving.snapshotSwap(marked, feedDir, dryRun)
+    // errors are quarantined as skipped, like the reference's mark_skipped
+    val statuses = delta.statuses.select(col("id"),
+      when(col("status") === "processed", "processed").otherwise("skipped")
+        .as("status"))
+    Receiving.snapshotSwap(
+      Receiving.markStatuses(feed, statuses, FhirEtl.EtlName, FhirEtl.Revision),
+      feedDir, dryRun)
   }
 
   /** J11 — manifest diff: records of `new` whose provenance-excluded deep
@@ -223,10 +220,28 @@ object Cli {
       .toJSON.collect().toSeq
   }
 
+  // The tables an ETL cycle reads, each with only the columns it uses.
+  // Reading parquet with a given schema skips schema inference, which
+  // would otherwise run one footer-reading job per table per cycle.
+  private val IdentifierSchema = StructType(
+    Seq("barcode", "uuid", "set_name").map(StructField(_, StringType)))
+  private val SampleKeySchema = StructType(
+    Seq("identifier", "collection_identifier").map(StructField(_, StringType)))
+
+  private def readFeed(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(Receiving.schema).parquet(dir)
+
+  /** The table at `dir`, or an empty one for `-`. */
+  private def readOrEmpty(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    if (dir == "-") spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](), schema)
+    else spark.read.schema(schema).parquet(dir)
+
   private def readFeedIfAny(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dir)) else None
+    if (fs.exists(p)) Some(readFeed(spark, dir)) else None
   }
 }

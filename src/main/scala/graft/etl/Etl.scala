@@ -58,9 +58,10 @@ object Etl {
     val pending = Receiving.unprocessed(feed, etlName, revision)
     val Parsed(ok, bad) = parseDocuments(pending, schema)
     process(ok)
-    val markedOk = Receiving.markProcessed(
-      feed, ok.select("id"), etlName, revision, status = "processed")
-    Receiving.markSkipped(markedOk, bad.select("id"), etlName, revision)
+    Receiving.markStatuses(feed,
+      ok.select(col("id"), lit("processed").as("status"))
+        .unionByName(bad.select(col("id"), lit("skipped").as("status"))),
+      etlName, revision)
   }
 
   /** One incremental cycle against the STATUS SIDE-TABLE (the O(batch)
@@ -380,7 +381,7 @@ object Etl {
     * Returns one disposition row per selected DET — exactly what
     * mark_loaded/mark_skipped append to processing_log (sans timestamp):
     * id, record, instrument, status ∈ (loaded|skipped), reason. Feed it
-    * to [[Receiving.statusDelta]] / [[Receiving.markProcessed]] to
+    * to [[Receiving.statusDelta]] / [[Receiving.markStatuses]] to
     * persist.
     *
     * Scale: routing and completeness are per-row; the repeat window

@@ -332,6 +332,62 @@ object FhirEtl {
       outer = true,
       gate = Some(col("status") === "processed"))
 
+  /** Bloom-gated semi-join (guide §3.2, r11): unknown barcodes are
+    * DROPPED by the inner identifier join (fhir.py:664-667 — real feeds
+    * routinely carry unresolvable barcodes), so the corpus side — the
+    * wide one, carrying pa_items — is pre-filtered on "might resolve"
+    * BEFORE its exchange with a Bloom filter built over the identifier
+    * dim's barcodes as a scalar subquery (one narrow dim scan; the
+    * plan's might_contain(scalar-subquery(bloom_filter_agg)) shape).
+    * False positives only ride the shuffle and die in the join; no
+    * false negatives, so the join result is identical.
+    *
+    * The gate applies only when the identifier join side is too large to
+    * broadcast (its plan-statistics size above the session's
+    * autoBroadcastJoinThreshold, the same test Catalyst's join selection
+    * makes). A broadcast join has no corpus-side exchange to shrink, and
+    * the filter would cost two jobs per consumer for nothing. The test is
+    * plan-time only, no job.
+    *
+    * Sizing follows the same statistics: expected items are the plan's
+    * row count, else its size over the estimated row width; bits are the
+    * optimum for a 1% false-positive rate at that count. Items are capped
+    * at 4M and bits at 2^26 (8 MB), Spark's runtime-filter limits. Past
+    * about 7M keys the filter is therefore the fixed 8 MB one, whose
+    * false-positive rate climbs with the key count (about 70% at 20M);
+    * a false positive still only costs its row's trip through the
+    * shuffle.
+    */
+  private def bloomGated(rows: DataFrame, ident: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge.{column => toCol, expression => toExpr}
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    import org.apache.spark.util.sketch.BloomFilter
+    val qe = ident.queryExecution
+    val stats = qe.optimizedPlan.stats
+    val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (stats.sizeInBytes <= threshold) rows
+    else {
+      val estimated = stats.rowCount.getOrElse(
+          stats.sizeInBytes / EstimationUtils.getSizePerRow(qe.optimizedPlan.output))
+        .min(BigInt(Long.MaxValue)).max(BigInt(1)).toLong
+      val items = estimated.min(BloomMaxItems)
+      val bits = BloomFilter.optimalNumOfBits(estimated, BloomFpp).min(BloomMaxBits)
+      val bloom = ident
+        .select(toCol(new BloomFilterAggregate(
+            new XxHash64(Seq(toExpr(col("i_barcode")))),
+            Literal(items), Literal(bits))
+          .toAggregateExpression()).as("bf"))
+        .scalar()
+      rows.filter(toCol(BloomFilterMightContain(
+        toExpr(bloom), new XxHash64(Seq(toExpr(col("barcode")))))))
+    }
+  }
+  private val BloomFpp = 0.01
+  private val BloomMaxItems = 4000000L
+  private val BloomMaxBits = 1L << 26
+
   /** The decomposed warehouse deltas of one batch of bundles. */
   final case class Delta(
       statuses: DataFrame, // id, status, skip_reason
@@ -483,29 +539,7 @@ object FhirEtl {
       .filter(col("barcode").isNotNull) // fhir.py:214-215: no barcode → continue
       .select(col("id"), col("barcode"), col("effective_datetime"),
         col("pa_items"))
-    // Bloom-gated semi-join (guide §3.2, r11): unknown barcodes are
-    // DROPPED by the inner identifier join (fhir.py:664-667 — real feeds
-    // routinely carry unresolvable barcodes), so the corpus side — the
-    // wide one, carrying pa_items — is pre-filtered on "might resolve"
-    // BEFORE its exchange with a Bloom filter built over the identifier
-    // dim's barcodes as a scalar subquery (one narrow dim scan; the
-    // plan's might_contain(scalar-subquery(bloom_filter_agg)) shape).
-    // False positives only ride the shuffle and die in the join; no
-    // false negatives, so the join result is identical. Sizing: 2^26
-    // bits (8 MB, the runtime-filter default cap) — ~1% fpp at 4M keys,
-    // degrading gracefully (~10%) at warehouse-scale 20M+ keys, where
-    // the filter still removes almost all unresolvable rows.
-    import org.apache.spark.sql.GraftSqlBridge.{column => toCol, expression => toExpr}
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val identBloom = identifiers
-      .select(toCol(new BloomFilterAggregate(
-          new XxHash64(Seq(toExpr(col("barcode")))),
-          Literal(4000000L), Literal(1L << 26))
-        .toAggregateExpression()).as("bf"))
-      .scalar()
-    val drResolvable = drSpec.filter(toCol(BloomFilterMightContain(
-      toExpr(identBloom), new XxHash64(Seq(toExpr(col("barcode")))))))
+    val drResolvable = bloomGated(drSpec, ident)
     val drBarcodes = drResolvable
       .join(ident, col("barcode") === col("i_barcode"), "inner")
       .filter(col("set_name")

@@ -67,28 +67,39 @@ object Receiving {
     feed.filter(!exists(col("processing_log"),
       e => e.getField("etl") === lit(etl) && e.getField("revision") === lit(revision)))
 
-  /** M8 — append a status entry to processing_log for the given ids.
-    * Copy-on-write: returns the rewritten feed; [[snapshotSwap]] persists
-    * it atomically, mirroring the reference's transactional commit
-    * (cli/command/__init__.py:120-158).
+  /** M8 — append one status entry to processing_log for each id of
+    * `statuses` (columns `id`, `status`) in ONE left join that carries
+    * the status: a cycle that marks some ids processed and others skipped
+    * joins the feed once, not once per status. Copy-on-write: returns the
+    * rewritten feed; [[snapshotSwap]] persists it atomically, mirroring
+    * the reference's transactional commit (cli/command/__init__.py:120-158).
     */
+  def markStatuses(
+      feed: DataFrame,
+      statuses: DataFrame,
+      etl: String,
+      revision: Int): DataFrame = {
+    val entry = struct(
+      lit(etl).as("etl"), lit(revision).as("revision"),
+      col("_status").as("status"), current_timestamp().as("timestamp"))
+    feed.join(statuses.select(col("id").as("_sid"), col("status").as("_status")),
+        col("id") === col("_sid"), "left")
+      .withColumn("processing_log",
+        when(col("_sid").isNotNull,
+          concat(col("processing_log"), array(entry)))
+          .otherwise(col("processing_log")))
+      .drop("_sid", "_status")
+  }
+
+  /** [[markStatuses]] with one status for every id of `processedIds`. */
   def markProcessed(
       feed: DataFrame,
       processedIds: DataFrame, // single column "id"
       etl: String,
       revision: Int,
-      status: String = "processed"): DataFrame = {
-    val entry = struct(
-      lit(etl).as("etl"), lit(revision).as("revision"),
-      lit(status).as("status"), current_timestamp().as("timestamp"))
-    feed.join(processedIds.select(col("id").as("_pid")),
-        col("id") === col("_pid"), "left")
-      .withColumn("processing_log",
-        when(col("_pid").isNotNull,
-          concat(col("processing_log"), array(entry)))
-          .otherwise(col("processing_log")))
-      .drop("_pid")
-  }
+      status: String = "processed"): DataFrame =
+    markStatuses(feed, processedIds.select(col("id"), lit(status).as("status")),
+      etl, revision)
 
   /** mark_skipped (reference etl/fhir.py:129-132): same append with
     * status=skipped — the per-record quarantine of §2.8.

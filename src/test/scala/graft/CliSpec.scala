@@ -37,19 +37,22 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
       | "location":[{"location":{"identifier":{"system":"https://seattleflu.org/site","value":"site-1"}}}]}}
       |]}""".stripMargin.replaceAll("\n", "")
 
+  private val malformed = """{"resourceType":"Bundle","type":"collection","entry":[{"""
+
   test("receive appends with continuing ids; etl-fhir honors dry-run then commits idempotently") {
     val feedDir = tmp() + "/fhir"
     val outDir = tmp() + "/delta"
     val nd1 = tmp() + "/a.ndjson"
     val nd2 = tmp() + "/b.ndjson"
     Files.writeString(java.nio.file.Path.of(nd1), bundle + "\n")
-    Files.writeString(java.nio.file.Path.of(nd2), bundle + "\n" + bundle + "\n")
+    Files.writeString(java.nio.file.Path.of(nd2),
+      bundle + "\n" + malformed + "\n" + bundle + "\n")
 
     Cli.receive(spark, feedDir, nd1)
     Cli.receive(spark, feedDir, nd2)
     val feed = spark.read.parquet(feedDir)
-    assert(feed.count() == 3)
-    assert(feed.agg(max(col("id"))).head().getLong(0) == 3L)
+    assert(feed.count() == 4)
+    assert(feed.agg(max(col("id"))).head().getLong(0) == 4L)
 
     // dry-run: full pipeline, no writes take effect
     Cli.etlFhir(spark, feedDir, "-", "-", outDir, dryRun = true)
@@ -62,12 +65,55 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(outDir + "/encounters").count() == 3)
     assert(spark.read.parquet(outDir + "/statuses")
       .filter(col("status") === "processed").count() == 3)
-    assert(spark.read.parquet(feedDir)
-      .filter(size(col("processing_log")) > 0).count() == 3)
+    // every id carries exactly one (fhir, 5) entry: processed for the
+    // bundles, skipped for the malformed document (id 3)
+    val marks = spark.read.parquet(feedDir)
+      .select(col("id"), filter(col("processing_log"), l =>
+        l.getField("etl") === "fhir" && l.getField("revision") === 5)
+        .getField("status").as("st"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(marks == Map(1L -> Seq("processed"), 2L -> Seq("processed"),
+      3L -> Seq("skipped"), 4L -> Seq("processed")), marks)
 
     // second cycle: nothing unprocessed → empty deltas (idempotence)
     Cli.etlFhir(spark, feedDir, "-", "-", outDir, dryRun = false)
     assert(spark.read.parquet(outDir + "/encounters").count() == 0)
+  }
+
+  test("one committed etl-fhir cycle runs at most 22 Spark jobs") {
+    import spark.implicits._
+    val feedDir = tmp() + "/fhir"
+    val identDir = tmp() + "/identifiers"
+    val samplesDir = tmp() + "/samples"
+    val nd = tmp() + "/a.ndjson"
+    Files.writeString(java.nio.file.Path.of(nd),
+      bundle + "\n" + malformed + "\n" + bundle + "\n")
+    Seq(("abcdefgh", "u-1", "samples")).toDF("barcode", "uuid", "set_name")
+      .write.parquet(identDir)
+    Seq(("u-1", "u-2")).toDF("identifier", "collection_identifier")
+      .write.parquet(samplesDir)
+    Cli.receive(spark, feedDir, nd)
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Cli.etlFhir(spark, feedDir, identDir, samplesDir, tmp() + "/delta",
+        dryRun = false)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    // 33 before this bound was set, when the cycle also inferred the
+    // feed's, identifiers' and samples' schemas from parquet footers,
+    // built a Bloom filter over the broadcast identifier table for each
+    // of the three deltas the DiagnosticReport path feeds, and marked the
+    // feed with two chained joins.
+    assert(jobs.get() <= 22, s"${jobs.get()} jobs")
   }
 
   test("refresh-view materializes pa_v1 from warehouse parquet") {

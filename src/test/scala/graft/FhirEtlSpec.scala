@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -123,6 +123,82 @@ class FhirEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
       created.head.getAs[String]("collection_identifier") == "uuid-77")
     assert(d.targets.collect().map(_.getString(0)).toSeq ==
       Seq(s"${FhirEtl.SnomedTerm}/441343005"))
+  }
+
+  test("decompose: the identifier Bloom gate runs only when the table " +
+      "cannot broadcast, and never changes the answer") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // DR barcodes: resolvable into the sample set with a stored sample
+    // (BCS1), resolvable into the sample set without one (BCS2, dropped
+    // as SampleNotFound), collection-set with a stored sample (BCC1) and
+    // without one (BCC2, sample created), outside the expected sets (BCX9,
+    // dropped) and unknown (NOPE1, NOPE2, dropped)
+    val barcodes = Seq("BCS1", "BCS2", "BCC1", "BCC2", "BCX9", "NOPE1", "NOPE2")
+    val idents = Seq(("BCS1", "u-s1", "samples"), ("BCS2", "u-s2", "samples"),
+      ("BCC1", "u-c1", "collections-scan"), ("BCC2", "u-c2", "collections-kiosks"),
+      ("BCX9", "u-x9", "not-a-set"))
+    val samples = Seq(("u-s1", null: String), ("s-9", "u-c1"))
+    val resultObs = entry("urn:uuid:r1",
+      """{"resourceType":"Observation",
+        |"code":{"coding":[{"system":"http://snomed.info/sct","code":"441343005"}]},
+        |"valueBoolean":true,
+        |"device":{"identifier":{"value":"OpenArray"}}}""".stripMargin)
+    val docs = barcodes.zipWithIndex.map { case (b, i) =>
+      (i + 1).toLong -> bundle(entry("urn:uuid:d1",
+        s"""{"resourceType":"DiagnosticReport",
+           |"specimen":[{"identifier":{"system":"$sys","value":"$b"}}],
+           |"result":[{"reference":"urn:uuid:r1"}],
+           |"effectiveDateTime":"2024-03-04T08:00:00Z"}""".stripMargin),
+        resultObs)
+    }
+
+    // ungated reference: the inner identifier join, by hand
+    val identOf = idents.map(t => t._1 -> (t._2, t._3)).toMap
+    val stored = samples.flatMap(t => Seq(t._1, t._2)).filter(_ != null).toSet
+    val resolved = barcodes.flatMap(b => identOf.get(b).map(b -> _))
+      .filter { case (_, (_, set)) => (FhirEtl.expectedCollectionSets ++
+        FhirEtl.expectedSampleSets).contains(set) }
+    val expectedPa = resolved.collect {
+      case (b, (u, set)) if stored(u) || FhirEtl.expectedCollectionSets.contains(set) =>
+        s"$b/441343005/OpenArray"
+    }.sorted
+    val expectedCreated = resolved.collect {
+      case (_, (u, set)) if !stored(u) && FhirEtl.expectedCollectionSets.contains(set) =>
+        s"null|$u|null|null|null"
+    }.sorted
+    assert(expectedPa == Seq("BCC1/441343005/OpenArray",
+      "BCC2/441343005/OpenArray", "BCS1/441343005/OpenArray"))
+    assert(expectedCreated == Seq("null|u-c2|null|null|null"))
+
+    object Plans extends AdaptiveSparkPlanHelper
+    def bloomBits(df: DataFrame): Seq[Long] =
+      Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case p => p.expressions.flatMap(_.collect {
+          case b: BloomFilterAggregate =>
+            b.numBitsExpression.eval().asInstanceOf[Number].longValue
+        })
+      }.flatten
+    def run(s: SparkSession): (Seq[String], Seq[String], Seq[Long]) = {
+      import s.implicits._
+      val d = FhirEtl.decompose(docs.toDF("id", "document"),
+        idents.toDF("barcode", "uuid", "set_name"),
+        samples.toDF("identifier", "collection_identifier"))
+      val pa = d.presenceAbsence.select("identifier")
+      val paRows = pa.collect().map(_.getString(0)).toSeq.sorted
+      val su = d.sampleUpdates.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      (paRows, su, bloomBits(pa))
+    }
+
+    val (paBroadcast, suBroadcast, bitsBroadcast) = run(spark)
+    assert(bitsBroadcast.isEmpty, "broadcastable identifier table was Bloom-gated")
+    val noBroadcast = spark.newSession()
+    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (paGated, suGated, bitsGated) = run(noBroadcast)
+    assert(bitsGated.nonEmpty, "shuffled identifier join lost its Bloom gate")
+    assert(bitsGated.forall(b => b > 0 && b < (1L << 26)), bitsGated)
+    assert(paBroadcast == expectedPa && paGated == expectedPa)
+    assert(suBroadcast == expectedCreated && suGated == expectedCreated)
   }
 
   test("upsertSamples preserves stored identifiers unless updateIdentifiers") {
