@@ -34,13 +34,14 @@ object Cli {
   private def session(): SparkSession = {
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      // one shuffle partition per core `local[*]` gets, unless told otherwise
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS",
-          Runtime.getRuntime.availableProcessors.toString))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // one shuffle partition per core the master offers (the machine's
+    // under local[*], the cluster's otherwise), unless told otherwise
+    s.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        s.sparkContext.defaultParallelism.toString))
     graft.plans.GraftExtensions.registerAll(s)
     s
   }

@@ -342,51 +342,40 @@ object FhirEtl {
     * False positives only ride the shuffle and die in the join; no
     * false negatives, so the join result is identical.
     *
-    * The gate applies only when the identifier join side is too large to
-    * broadcast (its plan-statistics size above the session's
-    * autoBroadcastJoinThreshold, the same test Catalyst's join selection
-    * makes). A broadcast join has no corpus-side exchange to shrink, and
-    * the filter would cost two jobs per consumer for nothing. The test is
-    * plan-time only, no job.
+    * The gate applies only when the identifier table looks too large to
+    * broadcast: the optimized-plan sizeInBytes of the whole `ident` frame
+    * above the session's autoBroadcastJoinThreshold. That is a
+    * conservative estimate, not Catalyst's own join-selection test: the
+    * join sees `ident` after the inferred isnotnull(i_barcode) and the
+    * set_name filters, and AQE may still broadcast at run time, so the
+    * gate can fire on a join that broadcasts anyway (two wasted jobs per
+    * consumer, the same answer). When the table does fit, a broadcast
+    * join has no corpus-side exchange to shrink and the gate is skipped.
+    * The test is plan-time only, no job.
     *
-    * Sizing follows the same statistics: expected items are the plan's
-    * row count, else its size over the estimated row width; bits are the
-    * optimum for a 1% false-positive rate at that count. Items are capped
-    * at 4M and bits at 2^26 (8 MB), Spark's runtime-filter limits. Past
-    * about 7M keys the filter is therefore the fixed 8 MB one, whose
-    * false-positive rate climbs with the key count (about 70% at 20M);
-    * a false positive still only costs its row's trip through the
-    * shuffle.
+    * Sizing is fixed: 4M expected items in 2^26 bits (8 MB, the
+    * runtime-filter default cap), about 1% false positives at 4M keys and
+    * climbing with the key count past that (about 70% at 20M); a false
+    * positive only costs its row's trip through the shuffle.
     */
   private def bloomGated(rows: DataFrame, ident: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge.{column => toCol, expression => toExpr}
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
-    import org.apache.spark.util.sketch.BloomFilter
     val qe = ident.queryExecution
-    val stats = qe.optimizedPlan.stats
     val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (stats.sizeInBytes <= threshold) rows
+    if (qe.optimizedPlan.stats.sizeInBytes <= threshold) rows
     else {
-      val estimated = stats.rowCount.getOrElse(
-          stats.sizeInBytes / EstimationUtils.getSizePerRow(qe.optimizedPlan.output))
-        .min(BigInt(Long.MaxValue)).max(BigInt(1)).toLong
-      val items = estimated.min(BloomMaxItems)
-      val bits = BloomFilter.optimalNumOfBits(estimated, BloomFpp).min(BloomMaxBits)
       val bloom = ident
         .select(toCol(new BloomFilterAggregate(
             new XxHash64(Seq(toExpr(col("i_barcode")))),
-            Literal(items), Literal(bits))
+            Literal(4000000L), Literal(1L << 26))
           .toAggregateExpression()).as("bf"))
         .scalar()
       rows.filter(toCol(BloomFilterMightContain(
         toExpr(bloom), new XxHash64(Seq(toExpr(col("barcode")))))))
     }
   }
-  private val BloomFpp = 0.01
-  private val BloomMaxItems = 4000000L
-  private val BloomMaxBits = 1L << 26
 
   /** The decomposed warehouse deltas of one batch of bundles. */
   final case class Delta(
@@ -482,9 +471,15 @@ object FhirEtl {
           specColl(col("spec_e")).getField("collectedPeriod").getField("start"),
           specColl(col("spec_e")).getField("collectedPeriod").getField("end"))
           .as("collection_date"))
-      // unknown barcode → skip specimen, not bundle (fhir.py:664-667);
-      // plain equi-join on barcode — AQE broadcasts if the identifier
-      // table is small, shuffles if it is warehouse-sized
+      // unknown barcode → skip specimen, not bundle (fhir.py:664-667).
+      // Shuffled hash join built on the batch's specimens, the small side,
+      // never a broadcast of the identifier table: a broadcast hash
+      // relation over string keys holds a whole memory page
+      // (spark.buffer.pageSize, 32 MB for a 4 GB driver on 4 cores) until
+      // a GC lets the ContextCleaner drop it, which would make the memory
+      // a cycle leaves behind depend on GC timing. At warehouse size the
+      // identifier table streams past the batch's hash table, unsorted.
+      .hint("shuffle_hash")
       .join(ident, col("barcode") === col("i_barcode"), "inner")
       // unexpected set → skip specimen (fhir.py:669-671)
       .filter(col("set_name").isin(expectedCollectionSets ++ expectedSampleSets: _*))

@@ -67,7 +67,8 @@ object Receiving {
     feed.filter(!exists(col("processing_log"),
       e => e.getField("etl") === lit(etl) && e.getField("revision") === lit(revision)))
 
-  /** M8 — append one status entry to processing_log for each id of
+  /** M8 — mark_processed / mark_skipped (reference etl/fhir.py:129-132):
+    * append one status entry to processing_log for each id of
     * `statuses` (columns `id`, `status`) in ONE left join that carries
     * the status: a cycle that marks some ids processed and others skipped
     * joins the feed once, not once per status. Copy-on-write: returns the
@@ -91,24 +92,8 @@ object Receiving {
       .drop("_sid", "_status")
   }
 
-  /** [[markStatuses]] with one status for every id of `processedIds`. */
-  def markProcessed(
-      feed: DataFrame,
-      processedIds: DataFrame, // single column "id"
-      etl: String,
-      revision: Int,
-      status: String = "processed"): DataFrame =
-    markStatuses(feed, processedIds.select(col("id"), lit(status).as("status")),
-      etl, revision)
-
-  /** mark_skipped (reference etl/fhir.py:129-132): same append with
-    * status=skipped — the per-record quarantine of §2.8.
-    */
-  def markSkipped(feed: DataFrame, ids: DataFrame, etl: String, revision: Int): DataFrame =
-    markProcessed(feed, ids, etl, revision, status = "skipped")
-
   // ---- status side-table: O(batch) mark_processed --------------------
-  // The copy-on-write markProcessed + snapshotSwap path rewrites the
+  // The copy-on-write markStatuses + snapshotSwap path rewrites the
   // ENTIRE feed to append one log element per touched row — at a 100 TB
   // feed with a 1 GB backlog that is a 100 TB rewrite per ETL cycle. The
   // reference appends one jsonb element in place

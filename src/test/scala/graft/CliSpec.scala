@@ -80,7 +80,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(outDir + "/encounters").count() == 0)
   }
 
-  test("one committed etl-fhir cycle runs at most 22 Spark jobs") {
+  test("one committed etl-fhir cycle runs at most 23 Spark jobs") {
     import spark.implicits._
     val feedDir = tmp() + "/fhir"
     val identDir = tmp() + "/identifiers"
@@ -112,8 +112,9 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     // feed's, identifiers' and samples' schemas from parquet footers,
     // built a Bloom filter over the broadcast identifier table for each
     // of the three deltas the DiagnosticReport path feeds, and marked the
-    // feed with two chained joins.
-    assert(jobs.get() <= 22, s"${jobs.get()} jobs")
+    // feed with two chained joins. 23 includes the specimen identifier
+    // join's second shuffle stage (a shuffled hash join, not a broadcast).
+    assert(jobs.get() <= 23, s"${jobs.get()} jobs")
   }
 
   test("refresh-view materializes pa_v1 from warehouse parquet") {

@@ -253,8 +253,9 @@ class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("graft_compact").toString + "/feed"
     val docs = (1 to 10).map(i => s"""{"n":$i}""").toDF("document")
     val feed = Receiving.fromDocuments(docs, "document")
-    val marked = Receiving.markProcessed(
-      feed, feed.filter(col("id") <= 7).select("id"), "x", 1)
+    val marked = Receiving.markStatuses(feed,
+      feed.filter(col("id") <= 7).select(col("id"), lit("processed").as("status")),
+      "x", 1)
     Receiving.compactByProcessed(marked, "x", 1, dir)
     val pending = Receiving.readUnprocessedPartition(spark, dir)
     assert(pending.count() == 3)

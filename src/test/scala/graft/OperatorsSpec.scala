@@ -142,8 +142,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val docs = Seq("d1", "d2", "d3").toDF("document")
     val feed = Receiving.fromDocuments(docs, "document")
-    val once = Receiving.markProcessed(
-      feed, feed.filter(col("id") === 1L).select("id"), "x", 1)
+    val once = Receiving.markStatuses(feed,
+      feed.filter(col("id") === 1L).select(col("id"), lit("processed").as("status")),
+      "x", 1)
     assert(Receiving.unprocessed(once, "x", 1).count() == 2)
     assert(Receiving.unprocessed(once, "x", 2).count() == 3) // revision bump
     assert(Receiving.unprocessed(once, "y", 1).count() == 3)
