@@ -31,45 +31,30 @@ import graft.shipping.Views
   */
 object Cli {
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // one shuffle partition per core the master offers (the machine's
-    // under local[*], the cluster's otherwise), unless told otherwise
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        s.sparkContext.defaultParallelism.toString))
-    graft.plans.GraftExtensions.registerAll(s)
-    s
-  }
-
   def main(args: Array[String]): Unit = args.toList match {
     case "receive" :: feedDir :: ndjson :: Nil =>
-      val spark = session()
+      val spark = Sessions.getOrCreate()
       receive(spark, feedDir, ndjson)
       spark.stop()
     case "etl-fhir" :: feedDir :: identDir :: samplesDir :: outDir :: rest =>
-      val spark = session()
+      val spark = Sessions.getOrCreate()
       etlFhir(spark, feedDir, identDir, samplesDir, outDir,
         dryRun = rest.contains("--dry-run"))
       spark.stop()
     case "manifest-diff" :: oldPath :: newPath :: outDir :: Nil =>
-      val spark = session()
+      val spark = Sessions.getOrCreate()
       manifestDiff(spark, oldPath, newPath, outDir)
       spark.stop()
     case "mint" :: existingDir :: count :: outDir :: rest =>
-      val spark = session()
+      val spark = Sessions.getOrCreate()
       mint(spark, existingDir, count.toInt, outDir, rest.headOption.map(_.toLong))
       spark.stop()
     case "refresh-view" :: whDir :: view :: outDir :: rest =>
-      val spark = session()
+      val spark = Sessions.getOrCreate()
       refreshView(spark, whDir, view, outDir, dryRun = rest.contains("--dry-run"))
       spark.stop()
     case "get-sample" :: identDir :: samplesDir :: barcode :: rest =>
-      val spark = session()
+      val spark = Sessions.getOrCreate()
       val rows = getSample(spark, identDir, samplesDir, barcode,
         byCollection = rest.contains("--collection"))
       rows.foreach(println)
@@ -79,7 +64,7 @@ object Cli {
         sys.exit(1)
       }
     case "explain" :: name :: sfDir :: rest =>
-      val spark = session()
+      val spark = Sessions.getOrCreate()
       explain(spark, name, sfDir, formatted = !rest.contains("--simple"))
         .foreach(println)
       spark.stop()

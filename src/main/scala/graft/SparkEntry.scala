@@ -757,12 +757,8 @@ object SparkEntry {
         .write.mode("overwrite").parquet(path)
   }
 
-  /** The materialized q55 feed (shared with plan audits). */
-  private[graft] def fhirFeed55Materialized(s: SparkSession, dir: String): DataFrame =
-    materializedFeed(s, "q55", dir)(fhirFeed55(s, dir))
-
-  /** The synthesized q55 bundle feed (shared with plan audits). */
-  private[graft] def fhirFeed55(s: SparkSession, dir: String): DataFrame = {
+  /** The synthesized q55 bundle feed. */
+  private def fhirFeed55(s: SparkSession, dir: String): DataFrame = {
     val sys = graft.etl.FhirEtl.InternalSystem
     val o = t(s, dir, "orders").select($("o_orderkey").as("k"),
       $("o_custkey").as("ck"),
@@ -866,8 +862,8 @@ object SparkEntry {
   }
 
   /** The synthesized q56 bundle feed (DiagnosticReport + Specimen +
-    * Observation per order — shared with dev.FhirProbe). */
-  private[graft] def fhirFeed56(s: SparkSession, dir: String): DataFrame = {
+    * Observation per order). */
+  private def fhirFeed56(s: SparkSession, dir: String): DataFrame = {
     val sys = graft.etl.FhirEtl.InternalSystem
     val snomedSys = graft.etl.FhirEtl.SnomedSystem
     val o = t(s, dir, "orders").select($("o_orderkey").as("k"),
@@ -936,9 +932,9 @@ object SparkEntry {
         array(drE, specE, obsE).as("entry"))).as("document"))
   }
 
-  /** The materialized q56 feed + its identifier/sample dims (shared with
-    * dev.FhirProbe's stage attribution). */
-  private[graft] def fhirQ56Inputs(
+  /** The materialized q56 feed + its identifier/sample dims (their
+    * per-stage cost at sf1: dev/PERF_r10.md §4). */
+  private def fhirQ56Inputs(
       s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val o = t(s, dir, "orders").select($("o_orderkey").as("k"))
     val bc = concat(lit("BC"), $("k"))

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratchspace.sparkLocalDir)
-      // static conf, must precede session creation: the default 100-entry
-      // generated-class cache thrashes across 85 queries x several codegen
-      // stages each, re-running janino on every pass
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // graft's optimizer rules + SQL functions (session-local injection;
-    // the spark.sql.extensions route needs the conf before JVM session
-    // creation, which sbt runMain shares across runs)
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = Sessions.getOrCreate()
     new java.io.File(outDir).mkdirs()
     // dev aid: SPARK_GRAFT_ONLY=q67_ivf_topk,q29_embed_topk limits the dump
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev main: the q19 scale question, measured on the PRODUCTION-shaped
@@ -32,16 +31,7 @@ import org.apache.spark.sql.functions._
 object BarcodeScale {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = graft.Sessions.getOrCreate()
     import graft.operators.Barcodes
 
     mode match {

@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev main: sf10 recall of the stratified containment path against
@@ -22,16 +21,7 @@ import org.apache.spark.sql.functions._
 object ContainmentScale {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("dev/sf10")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.getOrCreate()
 
     val corpus = graft.SparkEntry.containmentCorpus(spark, dir)
     val t0 = System.nanoTime()

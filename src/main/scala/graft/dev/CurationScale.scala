@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev main: the composed curation DAG (q281's shape — quality gate →
@@ -24,16 +24,7 @@ object CurationScale {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("template")
     val n = args.drop(1).headOption.map(_.toLong).getOrElse(500000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.getOrCreate()
 
     val corpus: DataFrame = mode match {
       case "natural" =>

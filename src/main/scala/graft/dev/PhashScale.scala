@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
@@ -83,15 +83,7 @@ object PhashScale {
     val width = args.drop(1).headOption.map(_.toInt).getOrElse(64)
     require(width == 64 || width == 128, s"width $width not in {64, 128}")
     val textured = args.drop(2).headOption.forall(_ != "lowtexture")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.getOrCreate()
     implicit val enc = Encoders.product[Blob]
 
     val blobs = spark.range(n).repartition(256)

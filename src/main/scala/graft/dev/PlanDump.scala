@@ -1,7 +1,6 @@
 package graft.dev
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev main (not part of the contract): write `.explain("formatted")`
@@ -9,6 +8,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * the plan artifacts the optimization rounds commit under plans/rNN/.
   *
   * Usage: PlanDump <outDir> <suffix> <sfDir> <query> [query...]
+  * (the committed dumps ran at 8 cores: SPARK_GRAFT_CPUS=8 reproduces
+  * their partition counts)
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,15 +19,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(outDir, suffix, sfDir, rest @ _*) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = graft.Sessions.getOrCreate()
     Files.createDirectories(Paths.get(outDir))
     rest.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

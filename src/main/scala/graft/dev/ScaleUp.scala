@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev main: synthesize a larger scale factor from the driver's sf0.1
@@ -34,22 +34,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      // STATIC conf — binds to the first session of the JVM. When Bench
-      // --sf1 synthesizes in-process, this session is that first one:
-      // without the raise here, Bench's own 10000-entry setting is a
-      // silent no-op and the 100-entry default thrashes janino across
-      // the 277-query passes (measured: a uniform 2.3× on TPC-H-ish
-      // queries in the first r7 sf1 run)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.getOrCreate()
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

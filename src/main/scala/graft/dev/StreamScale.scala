@@ -2,7 +2,6 @@ package graft.dev
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1-scale measurement of the streaming face (round-10 stretch): the
@@ -21,18 +20,7 @@ object StreamScale {
     val dir = args(0)
     val base = if (args.length > 1) args(1)
       else Files.createTempDirectory("graft_streamscale").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = graft.Sessions.getOrCreate()
 
     val feedDir = s"$base/feed"
     val outDir = s"$base/out"

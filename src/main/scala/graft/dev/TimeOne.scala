@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev main: run ONE gate query ONCE against a data dir and print the
   * wall seconds — the single-pass probe for 100× budget questions,
   * where Bench's warm + min-of-passes estimator would triple a
@@ -14,18 +12,7 @@ object TimeOne {
     val name = args(0)
     val dir = args(1)
     val passes = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratchspace.sparkLocalDir)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.registerAll(spark)
+    val spark = graft.Sessions.getOrCreate()
     val fn = graft.SparkEntry.queries(name)
     val times = (1 to passes).map { i =>
       val t0 = System.nanoTime()

@@ -14,13 +14,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `JsonTuple`) is a `CodegenFallback` that instantiates a Jackson
   * parser per row — measured ~1.3 s of q53_pa_v2's 1.9 s at sf0.1 for a
   * 20-char document, and identical costs for all three built-ins
-  * (dev/ProbeQ53). This scanner walks the UTF8String's bytes DIRECTLY
-  * (structural JSON characters are all ASCII, and UTF-8 continuation
-  * bytes are ≥ 0x80 so they can never be mistaken for one) — zero
-  * copies of the document, no parser object, no token stream; the only
-  * allocation is the extracted result. It stays inside whole-stage
-  * codegen (one static call per row) and matches `get_json_object`
-  * semantics on its supported domain:
+  * (dev/PERF_r7.md, "q53_pa_v2 profile"). This scanner walks the
+  * UTF8String's bytes DIRECTLY (structural JSON characters are all
+  * ASCII, and UTF-8 continuation bytes are ≥ 0x80 so they can never be
+  * mistaken for one) — zero copies of the document, no parser object,
+  * no token stream; the only allocation is the extracted result. It
+  * stays inside whole-stage codegen (one static call per row) and
+  * matches `get_json_object` semantics on its supported domain:
   *
   *   - top-level object with the key mapped to a string / number /
   *     boolean → the value's text (strings unescaped, numbers/booleans

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Scalar function surface of the engine (SURVEY.md §2.6), re-expressed as
   * pure `Column` combinators so every call stays inside Catalyst codegen.
-  * The only JVM escape hatches are [[HammingDistance]] (a native
-  * expression, registered for SQL by [[registerAll]]) and the shallow
-  * JSON-object merge (a UDF — cold path, used only by the merge engine).
+  * The JVM escape hatches are native expressions such as
+  * [[HammingDistance]], registered for SQL by [[registerAll]].
   */
 package object functions {
 
@@ -255,11 +254,6 @@ package object functions {
   def normalizeUrnUuids(json: Column): Column =
     regexp_replace(json, "\"urn:uuid:[0-9a-fA-F-]{36}\"", "\"\"")
 
-  private val jsonMapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m
-  }
-
   /** ltree lquery match — `lineage ~ pattern` (reference find_organism,
     * lib/id3c/cli/command/etl/consensus_genome.py:225-236, organisms like
     * `*.influenza.*`). Supports the lquery subset id3c uses: exact labels,
@@ -297,10 +291,11 @@ package object functions {
   /** jsonb shallow (top-level, right-biased) merge `a || b` (reference
     * lib/id3c/db/__init__.py:229,305; etl/__init__.py:128,586-587) as a
     * codegen native expression — [[JsonbMergeShallow]]. The Jackson UDF
-    * this replaces (kept below as the spec's equivalence reference) was
-    * the merge engine's last `ScalaUDF` on a hot path: q46's update fold
-    * ran it inside an interpreted `aggregate` lambda, one
-    * catalyst→scala conversion + Jackson parse/reserialize per element.
+    * this replaces (Round11OpsSpec keeps it as the equivalence
+    * reference) was the merge engine's last `ScalaUDF` on a hot path:
+    * q46's update fold ran it inside an interpreted `aggregate` lambda,
+    * one catalyst→scala conversion + Jackson parse/reserialize per
+    * element.
     */
   def jsonbMergeShallow(a: Column, b: Column): Column =
     toCol(JsonbMergeShallow(toExpr(a), toExpr(b)))
@@ -312,26 +307,4 @@ package object functions {
     */
   def jsonbMergeFold(docs: Column): Column =
     toCol(JsonbMergeFold(toExpr(docs)))
-
-  /** The original Jackson UDF — retained ONLY as the behavioural
-    * reference for [[JsonbMergeImpl]]'s equivalence spec; no query path
-    * calls it.
-    */
-  private[graft] val jsonbMergeShallowUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: String, b: String) =>
-      (Option(a), Option(b)) match {
-        case (None, bb) => bb.orNull
-        case (aa, None) => aa.orNull
-        case (Some(aa), Some(bb)) =>
-          val na = jsonMapper.readTree(aa)
-          val nb = jsonMapper.readTree(bb)
-          if (!na.isObject || !nb.isObject) bb
-          else {
-            val out = jsonMapper.createObjectNode()
-            na.fields().forEachRemaining { e => out.set(e.getKey, e.getValue); () }
-            nb.fields().forEachRemaining { e => out.set(e.getKey, e.getValue); () }
-            jsonMapper.writeValueAsString(out)
-          }
-      }
-    }
 }

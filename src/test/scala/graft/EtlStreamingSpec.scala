@@ -14,12 +14,7 @@ import graft.streaming.StreamingEtl
 
 class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.getOrCreate("local[4]")
 
   override def afterAll(): Unit = spark.stop()
 

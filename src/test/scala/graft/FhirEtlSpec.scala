@@ -9,12 +9,7 @@ import graft.etl.{Etl, FhirEtl}
 
 class FhirEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.getOrCreate("local[4]")
 
   override def afterAll(): Unit = spark.stop()
 

@@ -17,13 +17,8 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val warehouse = Files.createTempDirectory("graft_wh").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Sessions.getOrCreate("local[4]", warehouse = Some(warehouse))
 
   override def afterAll(): Unit = spark.stop()
 

@@ -12,16 +12,13 @@ import org.scalatest.BeforeAndAfterAll
   */
 class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.getOrCreate("local[4]")
 
   override def afterAll(): Unit = spark.stop()
 
   // ---- jsonb_merge_shallow: codegen expression vs the Jackson UDF ----
+
+  import Round11OpsSpec.jsonbMergeShallowUdf
 
   /** Canonical-JSON battery: compact serialization, standard escapes —
     * the engine norm (to_json output / stored jsonb text), which is the
@@ -53,7 +50,7 @@ class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("a", "b")
     val got = df.select(
         graft.functions.jsonbMergeShallow(col("a"), col("b")).as("m"),
-        graft.functions.jsonbMergeShallowUdf(col("a"), col("b")).as("u"))
+        jsonbMergeShallowUdf(col("a"), col("b")).as("u"))
       .collect()
     got.zipWithIndex.foreach { case (r, i) =>
       assert(r.get(0) == r.get(1),
@@ -73,7 +70,7 @@ class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     )
     val df = arrays.map(a => Tuple1(a)).toDF("docs")
     val udfFold = aggregate(col("docs"), lit(null).cast("string"),
-      (acc, d) => graft.functions.jsonbMergeShallowUdf(acc, d))
+      (acc, d) => jsonbMergeShallowUdf(acc, d))
     val got = df.select(
         graft.functions.jsonbMergeFold(col("docs")).as("m"),
         udfFold.as("u"))
@@ -162,4 +159,31 @@ class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fused.count() == refVerified.count())
     assert(fused.count() > 0, "degenerate spec: no pairs at all")
   }
+}
+
+object Round11OpsSpec {
+
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The original Jackson UDF — retained ONLY as the behavioural
+    * reference for [[graft.functions.JsonbMergeImpl]]'s equivalence
+    * spec; no query path calls it.
+    */
+  val jsonbMergeShallowUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf { (a: String, b: String) =>
+      (Option(a), Option(b)) match {
+        case (None, bb) => bb.orNull
+        case (aa, None) => aa.orNull
+        case (Some(aa), Some(bb)) =>
+          val na = jsonMapper.readTree(aa)
+          val nb = jsonMapper.readTree(bb)
+          if (!na.isObject || !nb.isObject) bb
+          else {
+            val out = jsonMapper.createObjectNode()
+            na.fields().forEachRemaining { e => out.set(e.getKey, e.getValue); () }
+            nb.fields().forEachRemaining { e => out.set(e.getKey, e.getValue); () }
+            jsonMapper.writeValueAsString(out)
+          }
+      }
+    }
 }

@@ -14,12 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class Round9OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.Sessions.getOrCreate("local[4]")
 
   override def afterAll(): Unit = spark.stop()
 
@@ -58,7 +53,6 @@ class Round9OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("winnow_minima SQL: empty array yields empty, null element errors") {
-    graft.plans.GraftExtensions.registerAll(spark)
     assert(spark.sql("select winnow_minima(array(), 3)")
       .head().getSeq[Long](0).isEmpty)
     assert(spark.sql("select winnow_minima(array(9L, 4L, 7L, 2L), 2)")
@@ -231,7 +225,6 @@ class Round9OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sorted_intersect_count: DESCRIBE FUNCTION surfaces the precondition") {
-    graft.plans.GraftExtensions.registerAll(spark)
     val txt = spark.sql("describe function extended sorted_intersect_count")
       .collect().map(_.getString(0)).mkString("\n")
     assert(txt.contains("PRECONDITION"), s"got:\n$txt")

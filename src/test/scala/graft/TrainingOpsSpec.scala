@@ -13,12 +13,7 @@ import graft.operators._
   */
 class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.getOrCreate("local[4]")
 
   override def afterAll(): Unit = spark.stop()
 
@@ -667,7 +662,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect()
     mf.foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
     // SQL registration works
-    graft.plans.GraftExtensions.registerAll(spark)
     val viaSql = spark.sql(
       """select json_scalar_field('{"k":"v"}', 'k')""").head().getString(0)
     assert(viaSql == "v")
@@ -717,7 +711,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head()
     assert(nl.isNullAt(0))
     // SQL registration works
-    graft.plans.GraftExtensions.registerAll(spark)
     assert(spark.sql(
       "select sorted_intersect_count(array(1L,2L,3L), array(2L,3L,9L))")
       .head().getInt(0) == 2)
@@ -774,7 +767,6 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         Dedup.wordShingleHashes(col("t"), 3)).head()
     assert(nr.isNullAt(0) && nr.isNullAt(1) && nr.isNullAt(2))
     // SQL registration
-    graft.plans.GraftExtensions.registerAll(spark)
     assert(spark.sql("select word_ngrams('a b c', 2)").head()
       .getSeq[String](0) == Seq("a b", "b c"))
     assert(spark.sql(
