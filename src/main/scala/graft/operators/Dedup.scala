@@ -185,18 +185,6 @@ object Dedup {
         array((0 until numHashes).map(s => col(s"_h$s")): _*).as("sig"))
   }
 
-  /** Exact n-gram Jaccard similarity join: pairs (idA < idB) with
-    * |A∩B| / |A∪B| >= threshold. Shingle-inverted-index plan: explode
-    * distinct shingles → equi-join on shingle → count per pair → Jaccard
-    * on counts. The shuffle key is the shingle, so skew comes only from
-    * stop-shingles; `dfCap` drops shingles appearing in more than that
-    * many docs (they carry no discriminative signal and are the classic
-    * skew key at corpus scale).
-    */
-  /** Shared inverted-index pair counting for the exact n-gram similarity
-    * family: (id_a < id_b, inter, sz_a, sz_b) of distinct-shingle
-    * intersections and per-doc set sizes.
-    */
   /** Candidate-mass estimate for the exact set-similarity family — the
     * circuit-breaker input. One pass over the corpus shingles, one
     * vocabulary-sized aggregate, one row out:
@@ -273,6 +261,10 @@ object Dedup {
     "answers the same |A∩B|/min predicate approximately) or raise " +
     "maxCandidatePairs deliberately."
 
+  /** Shared inverted-index pair counting for the exact n-gram similarity
+    * family: (id_a < id_b, inter, sz_a, sz_b) of distinct-shingle
+    * intersections and per-doc set sizes.
+    */
   private def ngramPairCounts(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, dfCap: Option[Int],
@@ -320,6 +312,14 @@ object Dedup {
         .withColumnRenamed("sz", "sz_b"), "id_b")
   }
 
+  /** Exact n-gram Jaccard similarity join: pairs (idA < idB) with
+    * |A∩B| / |A∪B| >= threshold. Shingle-inverted-index plan: explode
+    * distinct shingles → equi-join on shingle → count per pair → Jaccard
+    * on counts. The shuffle key is the shingle, so skew comes only from
+    * stop-shingles; `dfCap` drops shingles appearing in more than that
+    * many docs (they carry no discriminative signal and are the classic
+    * skew key at corpus scale).
+    */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, dfCap: Option[Int] = None,
@@ -678,15 +678,6 @@ object Dedup {
       .select("id_a", "id_b", "agree")
   }
 
-  /** Incremental near-dup detection: LSH candidates of a NEW batch
-    * against an EXISTING corpus — the daily-increment production shape.
-    * The self-join variant ([[minhashLshPairs]]) rescans the whole corpus
-    * every run; here the corpus's banded signatures are a standing index
-    * (in production: a bucketed table, so the batch's band join is
-    * shuffle-free on the corpus side) and only the batch is signed fresh.
-    * Output: (corpus_id, batch_id, agree) for pairs agreeing on >=
-    * `minAgree` of `numHashes` signature positions.
-    */
   /** The per-band bucket keys of a minhash signature: band b's bucket is
     * the md5 of its `bandSize` signature positions joined with "," —
     * THE band-hash definition, shared by the self-join pairs, the
@@ -716,6 +707,15 @@ object Dedup {
           .as(Seq("band", "bucket")))
   }
 
+  /** Incremental near-dup detection: LSH candidates of a NEW batch
+    * against an EXISTING corpus — the daily-increment production shape.
+    * The self-join variant ([[minhashLshPairs]]) rescans the whole corpus
+    * every run; here the corpus's banded signatures are a standing index
+    * (in production: a bucketed table, so the batch's band join is
+    * shuffle-free on the corpus side) and only the batch is signed fresh.
+    * Output: (corpus_id, batch_id, agree) for pairs agreeing on >=
+    * `minAgree` of `numHashes` signature positions.
+    */
   def minhashLshPairsAgainst(
       corpus: DataFrame, batch: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 4, numHashes: Int = 16, bandSize: Int = 4,
@@ -856,56 +856,50 @@ object Dedup {
     * minimum id reachable through any chain of pairs (`cluster_id`) —
     * the transitive-closure canonicalization that the pair-local
     * [[survivors]] policy approximates (A~B, B~C ⇒ one cluster {A,B,C}
-    * even though (A,C) was never a candidate pair).
+    * even though (A,C) was never a candidate pair). Ids may be of any
+    * orderable type (document ids, entity names). A node whose only pair
+    * is with itself is a singleton and gets no row: callers treat an
+    * absent id as its own cluster, as they must for ids with no pair.
     *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes `min(own label, neighbors' labels)`; converged when no label
-    * changed. Rounds = O(max component diameter); near-dup clusters are
-    * shallow (stars around a few hubs), so 2–4 rounds in practice. Each
-    * round is one shuffle on `src` plus one on `id`, both over bare
-    * (long, long) rows — document text never enters the loop. Labels are
-    * checkpointed per round (truncates lineage — an uncheckpointed loop
-    * re-executes every prior round each iteration). For adversarial
-    * long-chain graphs, switch to large-star/small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce", SoCC'14) —
-    * same join primitives, logarithmic rounds.
-    */
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14 — public algorithm): each round every node hooks
-    * its larger neighbors (large-star) then its smaller-or-equal
-    * neighbors (small-star) onto the minimum of its neighborhood.
-    * Converges in O(log n) rounds on ANY graph shape — the scale path
-    * for adversarial long chains where [[connectedComponents]]' label
-    * propagation needs O(diameter) rounds. Same output contract:
-    * (id, cluster_id = min reachable id).
+    * Algorithm: alternating large-star / small-star contraction
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14 — public algorithm): each round every node hooks its
+    * larger neighbors (large-star) then its smaller-or-equal neighbors
+    * (small-star) onto the minimum of its neighborhood. Converges in
+    * O(log n) rounds on ANY graph shape, long chains included, where
+    * min-label propagation needs O(diameter) rounds. Only bare
+    * (id, id) edges enter the loop — document text never does — and
+    * each round's edge set is checkpointed (truncates lineage — an
+    * uncheckpointed loop re-executes every prior round each iteration).
     *
     * Each star is ONE hash-partitioned window (`min(v) over partition
-    * by u`) over bare (long, long) edges — the naive formulation
-    * (groupBy-min then join the mins back on u) shuffles the edge set
-    * three times per star where the window shuffles it once, and the
-    * join back is on the same key with the same skew profile, so the
-    * window loses nothing. Mid-round dedup is skipped: large-star
-    * duplicates are bounded by the round's input edge count and
-    * collapse in the end-of-round canon distinct, and self-loops can't
-    * arise (the hook target m ≤ u < v).
+    * by u`) over the edges — the naive formulation (groupBy-min then
+    * join the mins back on u) shuffles the edge set three times per
+    * star where the window shuffles it once, and the join back is on
+    * the same key with the same skew profile, so the window loses
+    * nothing. Mid-round dedup is skipped: large-star duplicates are
+    * bounded by the round's input edge count and collapse in the
+    * end-of-round canon distinct, and self-loops can't arise (the hook
+    * target m ≤ u < v).
     *
     * Convergence detection: an order-independent aggregate signature
-    * (count, xor(xxhash64(u,v)), sum(u), sum(v)) over the checkpointed
-    * edge set, compared to last round's. One map-side-combining
-    * aggregation job per round — the previous 2× `exceptAll` cost two
-    * full shuffle-dedup jobs over the edge set per round, which at a
-    * 100 TB edge set is the dominant per-round overhead. Both rounds'
-    * sets are distinct canonical edge lists, so equal signatures with
-    * different sets needs a 64-bit hash-xor collision on top of equal
-    * counts and coordinate sums — negligible against maxRounds more
-    * contraction rounds being merely wasted, not wrong (a converged
-    * star forest is a fixed point of both stars). Coordinate sums are
+    * (count, xor(xxhash64(u,v)), sum(xxhash64(v,u))) over the
+    * checkpointed edge set, compared to last round's. One
+    * map-side-combining aggregation job per round — the previous 2×
+    * `exceptAll` cost two full shuffle-dedup jobs over the edge set per
+    * round, which at a 100 TB edge set is the dominant per-round
+    * overhead. Both rounds' sets are distinct canonical edge lists, so
+    * equal signatures with different sets needs a simultaneous collision
+    * of two independent 64-bit edge hashes (xor and sum) on top of equal
+    * counts — negligible against maxRounds more contraction rounds being
+    * merely wasted, not wrong (a converged star forest is a fixed point
+    * of both stars). Hashing, not summing the coordinates, keeps the
+    * signature independent of the id type. The hash sum is
     * decimal(38,0): ANSI mode makes a long sum an overflow error, and
-    * trillions of 2^63-scale ids genuinely can overflow at corpus scale.
+    * trillions of 2^63-scale hashes genuinely can overflow at corpus
+    * scale.
     */
-  def connectedComponentsAlternating(
-      pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"),
@@ -913,8 +907,8 @@ object Dedup {
         .distinct()
     def signature(e: DataFrame): Seq[Any] =
       e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))),
-        sum(col("u").cast("decimal(38,0)")),
-        sum(col("v").cast("decimal(38,0)"))).head().toSeq
+        sum(xxhash64(col("v"), col("u")).cast("decimal(38,0)")))
+        .head().toSeq
     var edges = canon(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
       .localCheckpoint(false)
     var sig: Seq[Any] = signature(edges)
@@ -952,6 +946,14 @@ object Dedup {
       edges = next
       round += 1
     }
+    // silent divergence is worse than a loud cap: an unconverged edge set
+    // is not yet a star forest, so it would return NON-minimal labels
+    // that disagree with any recursive-closure oracle (review r8) —
+    // every converged caller is unaffected, an unconverged one must say so
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxRounds rounds — " +
+          "raise maxRounds")
     // at convergence the edge set is a star forest rooted at each
     // component's minimum: (root, node) pairs + roots labeling themselves
     edges.select(col("v").as("id"), col("u").as("cluster_id"))
@@ -959,54 +961,12 @@ object Dedup {
         .distinct())
   }
 
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(false)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(false)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
-        .groupBy("src").agg(min("label").as("nbr_label"))
-        .select(col("src").as("id"), col("nbr_label"))
-      // LAZY checkpoint + one aggregate job: materializing the round's
-      // labels and counting improved ones happen in the SAME job (r11 —
-      // the eager-checkpoint + isEmpty form submitted two jobs per
-      // round; the probe is the only driver decision, so batching it
-      // into the materialization halves the loop's job submissions
-      // without touching convergence semantics)
-      val next = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("new_label"))
-        .localCheckpoint(false)
-      converged = next
-        .agg(count(when(col("new_label") < col("label"), 1)))
-        .head().getLong(0) == 0L
-      labels = next.select(col("id"), col("new_label").as("label"))
-      round += 1
-    }
-    // silent divergence is worse than a loud cap: a component whose
-    // diameter exceeds maxRounds would return NON-minimal labels that
-    // disagree with any recursive-closure oracle (review r8) — every
-    // converged caller is unaffected, an unconverged one must say so
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds — " +
-          "a component's min-label chain is longer; raise maxRounds")
-    labels.select(col("id"), col("label").as("cluster_id"))
-  }
-
   /** Dedup finalization: keep ONE representative document per near-dup
     * cluster — the corpus that actually ships to training. `clusters` is
-    * a (idCol, cluster_id) frame from [[connectedComponents]] /
-    * [[connectedComponentsAlternating]]; documents absent from it (no
-    * near-dup edge) are their own singleton cluster. The winner is the
-    * max-`weightCol` member, ties broken toward the smallest id.
+    * a (idCol, cluster_id) frame from [[connectedComponents]];
+    * documents absent from it (no near-dup edge) are their own
+    * singleton cluster. The winner is the max-`weightCol` member, ties
+    * broken toward the smallest id.
     *
     * Scale shape: the attach join is a plain equi-join on the id (AQE
     * broadcasts it when the clustered fraction is small; web-scale near
@@ -1112,26 +1072,6 @@ object Dedup {
       .select(col("id").as(idCol), col("cell"))
   }
 
-  /** Exact duplicate-substring statistics — the ExactSubstr dedup of Lee
-    * et al., "Deduplicating Training Data Makes Language Models Better"
-    * (arXiv:2107.06499), recast from a suffix array into a relational
-    * plan: every sliding `w`-token window of every document is keyed by
-    * its 60-bit md5 hash, and a window is DUPLICATED when its text occurs
-    * at two or more (doc, pos) sites corpus-wide (repeats inside one
-    * document count, exactly as a suffix array sees them). Per document
-    * the operator reports the duplicated-window count and how many tokens
-    * are covered by at least one duplicated window — the span statistic
-    * the suffix-array method cuts from the corpus.
-    *
-    * Plan shape at 100 TB: tokenize → per-row window hashes → posexplode
-    * (narrow; only (id, pos, hash) triples leave the row — document text
-    * never shuffles), ONE map-side-combined count per hash (uniform key
-    * by construction — a hash, not a word), a semi-join of the window
-    * stream against the duplicated-hash set, and a distinct-covered-index
-    * count whose ×w fan-out applies to duplicated windows only (rare on a
-    * clean corpus). No all-pairs stage anywhere; memory per task is
-    * bounded by the window stream, not the documents.
-    */
   /** Shared plumbing for the ExactSubstr pair: (base docs with token
     * arrays and counts, the (id, pos) stream of DUPLICATED windows). */
   private def windowDupFrames(
@@ -1163,6 +1103,26 @@ object Dedup {
       .localCheckpoint(false)) // both callers consume it twice
   }
 
+  /** Exact duplicate-substring statistics — the ExactSubstr dedup of Lee
+    * et al., "Deduplicating Training Data Makes Language Models Better"
+    * (arXiv:2107.06499), recast from a suffix array into a relational
+    * plan: every sliding `w`-token window of every document is keyed by
+    * its 60-bit md5 hash, and a window is DUPLICATED when its text occurs
+    * at two or more (doc, pos) sites corpus-wide (repeats inside one
+    * document count, exactly as a suffix array sees them). Per document
+    * the operator reports the duplicated-window count and how many tokens
+    * are covered by at least one duplicated window — the span statistic
+    * the suffix-array method cuts from the corpus.
+    *
+    * Plan shape at 100 TB: tokenize → per-row window hashes → posexplode
+    * (narrow; only (id, pos, hash) triples leave the row — document text
+    * never shuffles), ONE map-side-combined count per hash (uniform key
+    * by construction — a hash, not a word), a semi-join of the window
+    * stream against the duplicated-hash set, and a distinct-covered-index
+    * count whose ×w fan-out applies to duplicated windows only (rare on a
+    * clean corpus). No all-pairs stage anywhere; memory per task is
+    * bounded by the window stream, not the documents.
+    */
   def duplicateWindowStats(
       df: DataFrame, idCol: String, textCol: String, w: Int): DataFrame = {
     val (base, dupWins) = windowDupFrames(df, idCol, textCol, w)
@@ -1318,37 +1278,24 @@ object Dedup {
   /** Incremental connected-components maintenance: fold a NEW batch of
     * near-dup edges into a standing labeling without recomputing the
     * whole graph. Prior components collapse to depth-1 stars (member →
-    * label edges), so propagation over (stars ∪ new edges) converges in
-    * rounds proportional to the NEW edges' chain length — not the old
-    * graph's diameter — and the old graph's full edge set is never
-    * touched again. The result is IDENTICAL to a full recompute over
+    * label edges), so [[connectedComponents]] over (stars ∪ new edges)
+    * starts from an already-contracted forest and only the NEW edges
+    * need contracting — the old graph's full edge set is never touched
+    * again. The result is IDENTICAL to a full recompute over
     * (old ∪ new) edges (star edges preserve the equivalence classes);
     * pair generation for the increment is [[minhashLshPairsAgainst]]
     * (batch vs standing index) + a batch self-join, so the whole
     * standing corpus pays neither a pair search nor a CC pass per
-    * increment.
+    * increment. `prior` is (id, cluster_id) from a previous CC run,
+    * `newPairs` is (id_a, id_b).
     */
   def connectedComponentsIncremental(
-      prior: DataFrame, // (id, cluster_id) from a previous CC run
-      newPairs: DataFrame, // (id_a, id_b)
-      maxRounds: Int = 20): DataFrame =
+      prior: DataFrame, newPairs: DataFrame): DataFrame =
     connectedComponents(
       prior.filter(col("id") =!= col("cluster_id"))
         .select(col("id").as("id_a"), col("cluster_id").as("id_b"))
-        .unionByName(newPairs.select(col("id_a"), col("id_b"))),
-      maxRounds)
+        .unionByName(newPairs.select(col("id_a"), col("id_b"))))
 
-  /** Self-audit of the approximate dedup path: confusion counts of the
-    * banded-LSH pair set against the exact n-gram Jaccard pair set at
-    * `threshold`, SAME shingles for both sides, so the gap measured is
-    * purely MinHash/banding error (recall = LSH's banding miss rate,
-    * precision loss = band collisions below the threshold). Run this on
-    * a sampled slice before trusting the approximate path on the full
-    * corpus — the knob-tuning loop (numHashes / bandSize / minAgree)
-    * every production LSH deployment needs, as a query instead of a
-    * notebook. One row out: n_exact, n_lsh, n_both, n_exact_only
-    * (missed dups), n_lsh_only (spurious candidates), recall (rounded).
-    */
   /** LSH-gated exact Jaccard join — the production near-dup pipeline
     * shape (CCNet / C4 / FineWeb; public literature): MinHash band
     * collisions generate the candidate pairs, and the EXACT n-gram
@@ -1769,6 +1716,17 @@ object Dedup {
           numHashes, bandSize)
     }
 
+  /** Self-audit of the approximate dedup path: confusion counts of the
+    * banded-LSH pair set against the exact n-gram Jaccard pair set at
+    * `threshold`, SAME shingles for both sides, so the gap measured is
+    * purely MinHash/banding error (recall = LSH's banding miss rate,
+    * precision loss = band collisions below the threshold). Run this on
+    * a sampled slice before trusting the approximate path on the full
+    * corpus — the knob-tuning loop (numHashes / bandSize / minAgree)
+    * every production LSH deployment needs, as a query instead of a
+    * notebook. One row out: n_exact, n_lsh, n_both, n_exact_only
+    * (missed dups), n_lsh_only (spurious candidates), recall (rounded).
+    */
   def lshRecallAudit(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 4, threshold: Double = 0.5,

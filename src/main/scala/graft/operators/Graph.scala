@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Link-graph analytics over edge lists.
   *
-  * PageRank joins the connected-components family ([[Dedup.connectedComponents]],
-  * [[Dedup.connectedComponentsAlternating]]) as the engine's second
-  * iterative graph operator: where CC labels near-duplicate clusters,
-  * PageRank scores crawl/domain graphs for corpus curation — rank-weighted
-  * sampling and crawl prioritization are standard steps in assembling a
-  * web-scale training corpus.
+  * PageRank joins connected components ([[Dedup.connectedComponents]]) as
+  * the engine's second iterative graph operator: where CC labels
+  * near-duplicate clusters, PageRank scores crawl/domain graphs for
+  * corpus curation — rank-weighted sampling and crawl prioritization are
+  * standard steps in assembling a web-scale training corpus.
   */
 object Graph {
 

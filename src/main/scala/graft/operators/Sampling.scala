@@ -232,26 +232,6 @@ object Sampling {
       .drop("_rate")
   }
 
-  /** Per-group exact-quantile threshold filter — the quality-cutoff
-    * calibration step of a filtering pipeline ("keep each language's top
-    * 10% by model score"). The quantile is the DISCRETE lower quantile at
-    * `qBp` basis points (qBp = 9000 → p90): the smallest observed score
-    * whose cumulative count reaches `ceil(qBp · n_group / 10000)` =
-    * `(qBp·n + 9999) div 10000` — exact integer arithmetic end-to-end
-    * (a float `ceil(q·n)` is an engine-dependent coin flip: SQL engines
-    * parse 0.9 as decimal, Spark as double, and they round differently).
-    * Rows with `score >= threshold(group)` survive.
-    *
-    * Scale shape: the corpus collapses to a COMPACT (group, score) count
-    * frame first (map-side combined — its size is bounded by score
-    * cardinality, not corpus rows); the per-group cumulative sum windows
-    * over that compact frame only; thresholds broadcast back and the
-    * final filter is a broadcast-probe — the corpus itself is never
-    * shuffled and never windowed.
-    *
-    * Output: the input rows that meet their group's threshold, plus the
-    * group's `threshold` column.
-    */
   /** Leak-free train/val/test split assignment: each key's 60-bit hash,
     * reduced mod 10000, is bucketed into consecutive basis-point bands —
     * `splits = Seq(("train", 8000), ("val", 1000), ("test", 1000))`
@@ -390,6 +370,26 @@ object Sampling {
         col("_nid").as("neg_" + idCol))
   }
 
+  /** Per-group exact-quantile threshold filter — the quality-cutoff
+    * calibration step of a filtering pipeline ("keep each language's top
+    * 10% by model score"). The quantile is the DISCRETE lower quantile at
+    * `qBp` basis points (qBp = 9000 → p90): the smallest observed score
+    * whose cumulative count reaches `ceil(qBp · n_group / 10000)` =
+    * `(qBp·n + 9999) div 10000` — exact integer arithmetic end-to-end
+    * (a float `ceil(q·n)` is an engine-dependent coin flip: SQL engines
+    * parse 0.9 as decimal, Spark as double, and they round differently).
+    * Rows with `score >= threshold(group)` survive.
+    *
+    * Scale shape: the corpus collapses to a COMPACT (group, score) count
+    * frame first (map-side combined — its size is bounded by score
+    * cardinality, not corpus rows); the per-group cumulative sum windows
+    * over that compact frame only; thresholds broadcast back and the
+    * final filter is a broadcast-probe — the corpus itself is never
+    * shuffled and never windowed.
+    *
+    * Output: the input rows that meet their group's threshold, plus the
+    * group's `threshold` column.
+    */
   def quantileThresholdFilter(
       df: DataFrame, groupCol: String, scoreCol: String,
       qBp: Int): DataFrame = {
@@ -443,27 +443,6 @@ object Sampling {
       .select(df.columns.map(col): _*)
   }
 
-  /** Largest-remainder (Hamilton) quota allocation — the data-mixing
-    * step that turns per-source corpus sizes into an EXACT integer token
-    * budget per source: quota_g = floor(total·w_g / W) plus one extra
-    * for the groups with the largest remainders, so quotas sum to
-    * `total` exactly and every quota is within 1 of the ideal real
-    * -valued share (no systematic rounding drift toward big or small
-    * sources, unlike floor- or round-based mixing).
-    *
-    * All arithmetic is decimal(38,0)-exact (total·w overflows a long
-    * once w is corpus-scale). The deficit ranking is distributed: the
-    * remainder's top byte (monotone double coarsening — rounding may
-    * collapse neighbors but never reorders) buckets groups 256 ways,
-    * ranks are local per bucket ordered by the EXACT (remainder desc,
-    * group) key, and only the 256 bucket counts ride the tiny cumsum —
-    * one row per group never funnels through a single-partition window
-    * even with millions of groups (domains, not sources).
-    *
-    * Output: group, w (summed weight), quota; sum(quota) == total —
-    * except when the total weight is zero (nothing to apportion), which
-    * degenerates to all-zero quotas.
-    */
   /** Neyman (minimum-variance) sample allocation — the survey-sampling
     * upgrade of proportional quotas: stratum h receives budget
     * ∝ N_h·S_h (size × standard deviation), so volatile strata get the
@@ -496,6 +475,27 @@ object Sampling {
       .withColumnRenamed("group", "stratum")
   }
 
+  /** Largest-remainder (Hamilton) quota allocation — the data-mixing
+    * step that turns per-source corpus sizes into an EXACT integer token
+    * budget per source: quota_g = floor(total·w_g / W) plus one extra
+    * for the groups with the largest remainders, so quotas sum to
+    * `total` exactly and every quota is within 1 of the ideal real
+    * -valued share (no systematic rounding drift toward big or small
+    * sources, unlike floor- or round-based mixing).
+    *
+    * All arithmetic is decimal(38,0)-exact (total·w overflows a long
+    * once w is corpus-scale). The deficit ranking is distributed: the
+    * remainder's top byte (monotone double coarsening — rounding may
+    * collapse neighbors but never reorders) buckets groups 256 ways,
+    * ranks are local per bucket ordered by the EXACT (remainder desc,
+    * group) key, and only the 256 bucket counts ride the tiny cumsum —
+    * one row per group never funnels through a single-partition window
+    * even with millions of groups (domains, not sources).
+    *
+    * Output: group, w (summed weight), quota; sum(quota) == total —
+    * except when the total weight is zero (nothing to apportion), which
+    * degenerates to all-zero quotas.
+    */
   def proportionalAllocation(
       df: DataFrame, groupCol: String, weightCol: String,
       total: Long): DataFrame = {

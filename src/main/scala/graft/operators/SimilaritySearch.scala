@@ -137,18 +137,6 @@ object SimilaritySearch {
       .select("qid", "id", "cosine", "rank")
   }
 
-  /** LSH-bucketed ANN, banded OR-construction (multi-probe): corpus and
-    * query signatures over `numBands * bandBits` hyperplanes are split
-    * into bands; a corpus vector is a candidate for a query when ANY band
-    * agrees (equi-join on (band, bucket) — bounded fan-out), then exact
-    * cosine reranks and takes top-k per query.
-    *
-    * Recall: per-plane agreement p = 1 − θ/π ⇒ candidate probability
-    * 1 − (1 − p^bandBits)^numBands. Raise numBands for recall; raise
-    * bandBits with corpus size (≈ log2(N / target bucket size)) so
-    * buckets stay selective — the round-1 fixed 2^8 bucket count grew
-    * quadratic within buckets at 100× scale.
-    */
   /** IVF (inverted-file) ANN: the corpus is partitioned into `numCells`
     * cells by nearest centroid; a query probes only its `nprobe` nearest
     * cells and reranks exactly within them — the classic coarse-quantizer
@@ -246,6 +234,18 @@ object SimilaritySearch {
       .select("qid", "id", "cosine", "rank")
   }
 
+  /** LSH-bucketed ANN, banded OR-construction (multi-probe): corpus and
+    * query signatures over `numBands * bandBits` hyperplanes are split
+    * into bands; a corpus vector is a candidate for a query when ANY band
+    * agrees (equi-join on (band, bucket) — bounded fan-out), then exact
+    * cosine reranks and takes top-k per query.
+    *
+    * Recall: per-plane agreement p = 1 − θ/π ⇒ candidate probability
+    * 1 − (1 − p^bandBits)^numBands. Raise numBands for recall; raise
+    * bandBits with corpus size (≈ log2(N / target bucket size)) so
+    * buckets stay selective — the round-1 fixed 2^8 bucket count grew
+    * quadratic within buckets at 100× scale.
+    */
   def lshTopK(
       corpus: DataFrame, queries: DataFrame, k: Int,
       numBands: Int = 2, bandBits: Int = 8): DataFrame = {

@@ -341,6 +341,22 @@ object TextAnalysis {
         col("covered_tokens").cast("double") / col("total_tokens"))
   }
 
+  /** The (w1, w2) adjacent-token pair stream of `textCol`, carrying
+    * `cols` through — shared by [[bigramLmScore]] and [[dsirWeights]]. */
+  private def bigramPairs(
+      textCol: String)(df: DataFrame, cols: Column*): DataFrame =
+    // positional native bigrams (one byte scan; the zip_with form ran
+    // interpreted per token pair); tokens are whitespace-split, so the
+    // space join is reversible — same invariant pmiCollocations rides.
+    // The < 2-token guard keeps the legacy empty-stream semantics (the
+    // kernel would emit the clamped single-token gram).
+    df.select((cols :+ when(tokenCount(col(textCol)) >= 2,
+        graft.functions.wordNgramsNative(col(textCol), 2, distinct = false))
+        .otherwise(array().cast("array<string>")).as("_prs")): _*)
+      .select((cols :+ explode(col("_prs")).as("_g")): _*)
+      .select((cols :+ split_part(col("_g"), lit(" "), lit(1)).as("w1")
+        :+ split_part(col("_g"), lit(" "), lit(2)).as("w2")): _*)
+
   /** Model-based quality scoring via a distributed bigram language model
     * (the public CCNet/KenLM-filtering recipe, reduced to the n = 2 case
     * so counts stay exact): "train" = bigram + unigram counts over a
@@ -365,22 +381,6 @@ object TextAnalysis {
     * Output: doc_id, n_pairs, score_q20 (both BIGINT; score_q20 = 0 for
     * docs with < 2 tokens).
     */
-  /** The (w1, w2) adjacent-token pair stream of `textCol`, carrying
-    * `cols` through — shared by [[bigramLmScore]] and [[dsirWeights]]. */
-  private def bigramPairs(
-      textCol: String)(df: DataFrame, cols: Column*): DataFrame =
-    // positional native bigrams (one byte scan; the zip_with form ran
-    // interpreted per token pair); tokens are whitespace-split, so the
-    // space join is reversible — same invariant pmiCollocations rides.
-    // The < 2-token guard keeps the legacy empty-stream semantics (the
-    // kernel would emit the clamped single-token gram).
-    df.select((cols :+ when(tokenCount(col(textCol)) >= 2,
-        graft.functions.wordNgramsNative(col(textCol), 2, distinct = false))
-        .otherwise(array().cast("array<string>")).as("_prs")): _*)
-      .select((cols :+ explode(col("_prs")).as("_g")): _*)
-      .select((cols :+ split_part(col("_g"), lit(" "), lit(1)).as("w1")
-        :+ split_part(col("_g"), lit(" "), lit(2)).as("w2")): _*)
-
   def bigramLmScore(
       corpus: DataFrame, reference: DataFrame,
       idCol: String, textCol: String): DataFrame = {

@@ -28,4 +28,26 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(boomRuns.get == 1, "a failed query must not be run again")
     assert(Bench.compactLine(r, 4, "unused").contains("\"failed\":1"))
   }
+
+  test("SparkEntry.materializedFeed sees a table rewritten behind the same path") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-feed").toFile
+    val table = s"$dir/t.parquet"
+    def feed(): Set[Long] =
+      SparkEntry.materializedFeed(spark, "spec_feed", dir.getPath)(
+        spark.read.parquet(table).select(($"x" * 2).as("y")))
+        .as[Long].collect().toSet
+    try {
+      Seq(1L, 2L).toDF("x").write.parquet(table)
+      assert(feed() == Set(2L, 4L))
+      Seq(5L).toDF("x").write.mode("overwrite").parquet(table)
+      assert(feed() == Set(10L), "the feed of the old table was read back")
+    } finally {
+      import org.apache.commons.io.FileUtils.deleteDirectory
+      deleteDirectory(dir)
+      new java.io.File(Scratchspace.root, "graft_feeds")
+        .listFiles((_: java.io.File, n: String) => n.startsWith("spec_feed_"))
+        .foreach(deleteDirectory)
+    }
+  }
 }

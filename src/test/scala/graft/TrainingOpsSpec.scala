@@ -176,33 +176,73 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
-  test("connectedComponentsAlternating matches label propagation on a long chain") {
+  /** Exact connected components on the driver: union-find over the
+    * collected pairs, each component labelled with its minimum id. */
+  private def unionFindCc[T](pairs: Seq[(T, T)])(
+      implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // union by min keeps every root the minimum of its component
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { val lo = ord.min(ra, rb); parent(ra) = lo; parent(rb) = lo }
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  test("connectedComponents matches union-find on a long chain") {
     import spark.implicits._
     // a 60-node chain (worst case for propagation) + a 5-ring + a pair
     val chain = (0L until 59L).map(i => (i, i + 1))
     val ring = (100L until 104L).map(i => (i, i + 1)) :+ (104L, 100L)
     val pair = Seq((500L, 501L))
     val pairs = (chain ++ ring ++ pair).toDF("id_a", "id_b")
-    val alt = Dedup.connectedComponentsAlternating(pairs)
+    val alt = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.connectedComponents(pairs, maxRounds = 100)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(alt == prop)
+    val ref = unionFindCc(chain ++ ring ++ pair)
+    assert(alt == ref)
     assert(alt(59L) == 0L && alt(104L) == 100L && alt(501L) == 500L)
   }
 
-  test("connectedComponentsAlternating matches on a random-ish dense graph") {
+  test("connectedComponents matches union-find on a random-ish dense graph") {
     import spark.implicits._
     // deterministic pseudo-random edges over 80 nodes
-    val pairs = (1L until 200L)
+    val edges = (1L until 200L)
       .map(i => ((i * 7919) % 80, (i * 104729) % 80))
       .filter { case (a, b) => a != b }
-      .toDF("id_a", "id_b")
-    val alt = Dedup.connectedComponentsAlternating(pairs)
+    val pairs = edges.toDF("id_a", "id_b")
+    val alt = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.connectedComponents(pairs, maxRounds = 100)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(alt == prop)
+    val ref = unionFindCc(edges)
+    assert(alt == ref)
+  }
+
+  test("connectedComponents labels string ids with the least reachable id") {
+    import spark.implicits._
+    // a 12-node chain, a 4-ring and a pair over name-like string ids
+    // (zero-padded so string order matches chain order)
+    val chain = (0 until 11).map(i => (f"chain $i%02d", f"chain ${i + 1}%02d"))
+    val ring = Seq(("ring d", "ring a"), ("ring a", "ring c"),
+      ("ring c", "ring b"), ("ring b", "ring d"))
+    val pair = Seq(("old anvil", "old anvils"))
+    val edges = chain ++ ring ++ pair
+    val cc = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(cc == unionFindCc(edges))
+    assert(cc("chain 11") == "chain 00" && cc("ring d") == "ring a" &&
+      cc("old anvils") == "old anvil")
+  }
+
+  test("connectedComponents throws when it has not converged in maxRounds") {
+    import spark.implicits._
+    val chain = (0L until 59L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain, maxRounds = 1)
+    }
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
   }
 
   test("saltedJoin matches the plain join on skewed data") {
