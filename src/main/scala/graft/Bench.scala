@@ -133,32 +133,6 @@ object Bench {
     def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    // dev aid (SPARK_GRAFT_STALL_DUMP=1): when a query exceeds 5s, dump
-    // every live thread's stack once — tells slow-state diagnosis WHERE
-    // the serialized time goes (janino? broadcast await? shuffle fetch?)
-    val stallDump = sys.env.contains("SPARK_GRAFT_STALL_DUMP")
-    def timedForce(name: String, df: => DataFrame): Unit = {
-      if (!stallDump) { force(df); return }
-      val t = new java.util.Timer(true)
-      t.schedule(new java.util.TimerTask {
-        def run(): Unit = {
-          import scala.jdk.CollectionConverters._
-          val sb = new StringBuilder(s"[stall] $name >5s; thread stacks:\n")
-          Thread.getAllStackTraces.asScala.foreach { case (th, frames) =>
-            if (th.getState != Thread.State.WAITING || frames.exists(f =>
-                !f.getClassName.startsWith("java.") &&
-                !f.getClassName.startsWith("jdk.") &&
-                !f.getClassName.startsWith("scala.concurrent"))) {
-              sb.append(s"  ${th.getName} ${th.getState}\n")
-              frames.take(14).foreach(f => sb.append(s"    $f\n"))
-            }
-          }
-          System.err.println(sb)
-        }
-      }, 5000L)
-      try force(df) finally t.cancel()
-    }
-
     // Session hygiene between queries — round 1's bench degraded 10-50×
     // over the run because leaked caches pinned generated classes (and with
     // them the JIT code cache): clear the SQL cache AND any persistent RDDs
@@ -188,7 +162,7 @@ object Bench {
       else {
         val t0 = System.nanoTime()
         val ok =
-          try { timedForce(name, fn(spark, dir)); true }
+          try { force(fn(spark, dir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $tag$name failed: ${e.getMessage}")
             failed += name

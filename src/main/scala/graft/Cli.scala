@@ -215,7 +215,8 @@ object Cli {
     Seq("identifier", "collection_identifier").map(StructField(_, StringType)))
 
   private def readFeed(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(Receiving.schema).parquet(dir)
+    readFeedIfAny(spark, dir).getOrElse(
+      throw new java.io.FileNotFoundException(s"no feed at $dir"))
 
   /** The table at `dir`, or an empty one for `-`. */
   private def readOrEmpty(spark: SparkSession, dir: String,
@@ -224,10 +225,17 @@ object Cli {
       java.util.List.of[org.apache.spark.sql.Row](), schema)
     else spark.read.schema(schema).parquet(dir)
 
+  /** The feed at `dir`, if there is one. A swap that crashed between
+    * its two renames is rolled back first ([[Receiving.recoverSwap]]):
+    * the feed then sits in a `.bak-*` sibling, and reading past it
+    * would renumber ids from 0 and swap the backup away.
+    */
   private def readFeedIfAny(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(readFeed(spark, dir)) else None
+    Receiving.recoverSwap(fs, dir)
+    if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
+      Some(spark.read.schema(Receiving.schema).parquet(dir))
+    else None
   }
 }

@@ -154,12 +154,13 @@ object Dedup {
   def wordShingleHashes(text: Column, n: Int): Column =
     graft.functions.wordNgramHash60(text, n, distinct = true)
 
-  /** The pre-shingled frame the whole exact/LSH containment family
-    * computes from — (id, _grams sorted gram-hash array, _sz) — built
-    * ONCE per operator call and lazily checkpointed (r11): the shingle
-    * kernel is the family's dominant CPU cost, and the audits previously
-    * re-ran it up to four times per query (exact side, LSH side's sets,
-    * LSH side's signatures, the audit's own size frame). Everything
+  /** The pre-shingled frame the whole exact/LSH Jaccard and
+    * containment family computes from — (id, _grams sorted gram-hash
+    * array, _sz) — built ONCE per operator call and lazily checkpointed
+    * (r11): the shingle kernel is the family's dominant CPU cost, and
+    * the audits previously re-ran it up to four times per query (exact
+    * side, LSH side's sets, LSH side's signatures, the audit's own size
+    * frame). Everything
     * downstream (signatures, prefix ranks, verify arrays, size strata)
     * derives from this frame.
     */
@@ -190,13 +191,13 @@ object Dedup {
     * vocabulary-sized aggregate, one row out:
     *
     *   - n_docs, total_pairs = n_docs·(n_docs−1)/2 (the all-pairs mass)
-    *   - n_postings (distinct (doc, gram) rows after `dfCap`), n_grams
-    *     (distinct grams), max_df (hottest inverted-index key — the skew
-    *     signal)
+    *   - n_postings (distinct (doc, gram) rows), n_grams (distinct
+    *     grams), max_df (hottest inverted-index key — the skew signal)
     *   - candidate_pairs = Σ_g df(g)·(df(g)−1)/2 — the EXACT row count
-    *     the inverted-index self-join of [[ngramJaccardPairs]] /
-    *     [[ngramContainmentPairs]] would produce (before per-pair
-    *     grouping), and an upper bound for the prefix-filtered forms.
+    *     of a full inverted-index self-join on the gram (before per-pair
+    *     grouping), and an upper bound for the prefix-filter joins'
+    *     ([[prefixFilterJaccardPairs]], [[prefixFilterContainmentPairs]])
+    *     candidate mass.
     *
     * When candidate_pairs ≈ total_pairs the vocabulary is non-selective
     * (every prefilter degenerates: the round-6 100× template corpus put
@@ -208,16 +209,12 @@ object Dedup {
     */
   def candidateMassStats(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int, dfCap: Option[Int] = None): DataFrame = {
+      n: Int): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
         explode(wordShingleHashes(col(textCol), n)).as("gram"))
     val dfreq = sh.groupBy("gram").agg(count(lit(1)).as("_df"))
-    val capped = dfCap match {
-      case Some(cap) => dfreq.filter(col("_df") <= cap)
-      case None => dfreq
-    }
     val d = col("_df").cast("decimal(38,0)")
-    val stats = capped.agg(
+    val stats = dfreq.agg(
       coalesce(sum(col("_df")), lit(0L)).cast("long").as("n_postings"),
       count(lit(1)).cast("long").as("n_grams"),
       coalesce(max(col("_df")), lit(0L)).cast("long").as("max_df"),
@@ -232,12 +229,14 @@ object Dedup {
         "candidate_pairs", "total_pairs")
   }
 
-  /** Eager budget check shared by the exact-similarity guards: `massOf2x`
-    * is a 1-column frame whose single row holds TWICE the estimated
-    * candidate mass (Σ df·(df−1) or Σ 2·df_a·df_b — callers avoid the
-    * division); collect it (one small job) and fail fast when over
-    * budget. The estimate job itself only shuffles the vocabulary-sized
-    * gram histogram — linear, never pair mass.
+  /** Eager budget check shared by the exact-similarity guards (the
+    * prefix-filter joins, the banded and pigeonhole pair joins, the
+    * barcode and symspell joins): `massOf2x` is a 1-column frame whose
+    * single row holds TWICE the estimated candidate mass (Σ dfp·(dfp−1)
+    * over prefix postings, Σ 2·dfp·df for the containment probe —
+    * callers avoid the division); collect it (one small job) and fail
+    * fast when over budget. The estimate job itself only shuffles the
+    * vocabulary-sized gram histogram — linear, never pair mass.
     */
   private[operators] def requireCandidateBudget(
       op: String, massOf2x: DataFrame, budget: Long, hint: String): Unit = {
@@ -261,75 +260,6 @@ object Dedup {
     "answers the same |A∩B|/min predicate approximately) or raise " +
     "maxCandidatePairs deliberately."
 
-  /** Shared inverted-index pair counting for the exact n-gram similarity
-    * family: (id_a < id_b, inter, sz_a, sz_b) of distinct-shingle
-    * intersections and per-doc set sizes.
-    */
-  private def ngramPairCounts(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int, dfCap: Option[Int],
-      maxCandidatePairs: Option[Long] = None): DataFrame = {
-    val sh0 = df.select(col(idCol).as("id"),
-        explode(wordShingleHashes(col(textCol), n)).as("gram"))
-    // with the guard on, the parse+shingle pass feeds both the estimate
-    // job and the real plan — checkpoint it once
-    val sh = if (maxCandidatePairs.isDefined) sh0.localCheckpoint(false)
-      else sh0
-    // ONE vocabulary histogram serves both the dfCap filter and the
-    // guard estimate (the guard over a capped corpus reads the SAME
-    // capped rows the join will see — no second gram shuffle)
-    val freq0 = if (dfCap.isDefined || maxCandidatePairs.isDefined)
-      Some(sh.groupBy("gram").agg(count(lit(1)).as("_df")))
-    else None
-    // checkpoint only when the histogram has two consumers (estimate
-    // job + filter join); a single consumer reads it straight through
-    val freq = if (dfCap.isDefined && maxCandidatePairs.isDefined)
-      freq0.map(_.localCheckpoint(false)) else freq0
-    val capped = (freq, dfCap) match {
-      case (Some(f), Some(cap)) => Some(f.filter(col("_df") <= cap))
-      case (Some(f), None) => Some(f)
-      case _ => None
-    }
-    val filtered = dfCap match {
-      case Some(_) => sh.join(capped.get.select("gram"), "gram")
-      case None => sh
-    }
-    maxCandidatePairs.foreach { budget =>
-      val d = col("_df").cast("decimal(38,0)")
-      requireCandidateBudget("ngramPairCounts",
-        capped.get.agg(coalesce(sum(d * (d - lit(1))),
-          lit(0).cast("decimal(38,0)")).cast("decimal(38,0)")),
-        budget, LshHint)
-    }
-    val sizes = filtered.groupBy("id").agg(count(lit(1)).as("sz"))
-    filtered.as("a").hint("shuffle_hash").join(filtered.as("b"),
-        col("a.gram") === col("b.gram") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.withColumnRenamed("id", "id_a")
-        .withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b")
-        .withColumnRenamed("sz", "sz_b"), "id_b")
-  }
-
-  /** Exact n-gram Jaccard similarity join: pairs (idA < idB) with
-    * |A∩B| / |A∪B| >= threshold. Shingle-inverted-index plan: explode
-    * distinct shingles → equi-join on shingle → count per pair → Jaccard
-    * on counts. The shuffle key is the shingle, so skew comes only from
-    * stop-shingles; `dfCap` drops shingles appearing in more than that
-    * many docs (they carry no discriminative signal and are the classic
-    * skew key at corpus scale).
-    */
-  def ngramJaccardPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, dfCap: Option[Int] = None,
-      maxCandidatePairs: Option[Long] = None): DataFrame =
-    ngramPairCounts(df, idCol, textCol, n, dfCap, maxCandidatePairs)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-
   /** Exact set-similarity join via PREFIX FILTERING (the AllPairs /
     * PPJoin family, Bayardo et al. WWW'07; public literature): pairs
     * with n-gram Jaccard >= t, provably NO false negatives, but with
@@ -342,8 +272,8 @@ object Dedup {
     * pigeonhole picks the same witness gram on both sides because both
     * prefixes are the heads of the SAME order). Ordering grams rarest-
     * first makes the indexed grams precisely the ones with the fewest
-    * collisions, so at t=0.7 the gram join touches ~30% of the index
-    * volume of [[ngramJaccardPairs]] and its hottest key is a rare
+    * collisions, so at t=0.7 the gram join touches ~30% of the volume
+    * of a full inverted-index self-join and its hottest key is a rare
     * gram, not a stop-gram — the classic skew fix and the scale win.
     * Candidates are then verified EXACTLY on the full sorted gram sets
     * (one allocation-free [[graft.functions.SortedIntersectCount]] merge
@@ -460,25 +390,10 @@ object Dedup {
     * containment but near |A|/|B| ≈ 0 on Jaccard; news-wire reprints,
     * quoted tweets, and template-wrapped articles are the corpus-curation
     * cases). Emits pairs where EITHER direction reaches `threshold`,
-    * with both containments. Same inverted-index plan (and `dfCap` skew
-    * guard) as [[ngramJaccardPairs]] — one shared candidate/count stage
-    * serves the whole exact-similarity family.
-    */
-  def ngramContainmentPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, dfCap: Option[Int] = None,
-      maxCandidatePairs: Option[Long] = None): DataFrame =
-    ngramPairCounts(df, idCol, textCol, n, dfCap, maxCandidatePairs)
-      .withColumn("c_ab",
-        round(col("inter").cast("double") / col("sz_a"), 6))
-      .withColumn("c_ba",
-        round(col("inter").cast("double") / col("sz_b"), 6))
-      .filter(greatest(col("c_ab"), col("c_ba")) >= threshold)
-      .select("id_a", "id_b", "c_ab", "c_ba")
-
-  /** EXACT containment pairs via an asymmetric prefix filter — the same
-    * result set as [[ngramContainmentPairs]] (no false negatives,
-    * candidates verified on full gram sets) without the full
+    * with both containments rounded to 6 places.
+    *
+    * EXACT via an asymmetric prefix filter: no false negatives,
+    * candidates verified on full gram sets, without a full
     * inverted-index self-join whose Σdf² pair volume grows quadratically
     * (the sf1 scale run measured 1.2s → 34.7s at 10× corpus).
     *
@@ -999,9 +914,7 @@ object Dedup {
     * Plan: distinct (source, gram) rows (two map-side-combined
     * aggregates), then a gram-keyed self-join whose fan-out per gram is
     * bounded by |sources|² — never corpus-sized — and one count per
-    * source pair. Text reduces to grams at the scan; at 100 TB add the
-    * [[ngramJaccardPairs]] dfCap guard if a stop-gram is shared by every
-    * source.
+    * source pair. Text reduces to grams at the scan.
     *
     * Output: source_a < source_b, shared, sz_a, sz_b, jaccard (round 6).
     */
@@ -1301,11 +1214,11 @@ object Dedup {
     * collisions generate the candidate pairs, and the EXACT n-gram
     * Jaccard is computed only on those candidates, so reported
     * similarities are true Jaccard values while the pair search never
-    * exceeds the banding's collision mass. Contrast the two exact
-    * operators: [[ngramJaccardPairs]]/[[prefixFilterJaccardPairs]] are
-    * recall-complete but pay the corpus's intrinsic prefix-collision
-    * mass (measured OOM-scale at the 100× run on the template-vocabulary
-    * corpus); this trades the banding miss rate — measured per-corpus by
+    * exceeds the banding's collision mass. Contrast the exact operator
+    * [[prefixFilterJaccardPairs]]: recall-complete, but it pays the
+    * corpus's intrinsic prefix-collision mass (measured OOM-scale at the
+    * 100× run on the template-vocabulary corpus); this trades the
+    * banding miss rate — measured per-corpus by
     * [[lshRecallAudit]] — for candidate mass bounded by band buckets.
     * Same shingle/signature conventions as [[minhashLshPairs]]; the
     * verify side carries 60-bit gram hashes, as
@@ -1317,37 +1230,50 @@ object Dedup {
   def lshJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 4, threshold: Double = 0.5,
-      numHashes: Int = 16, bandSize: Int = 4): DataFrame = {
+      numHashes: Int = 16, bandSize: Int = 4): DataFrame =
+    lshJaccardPairsFrom(shingleSets(df, idCol, textCol, shingleN),
+      threshold, numHashes, bandSize)
+
+  /** [[lshJaccardPairs]] over a pre-built [[shingleSets]] frame — the
+    * twin of [[lshContainmentPairsFrom]]: signatures and verification
+    * arrays both derive from the one checkpointed shingle frame.
+    */
+  private[operators] def lshJaccardPairsFrom(
+      sets: DataFrame, threshold: Double,
+      numHashes: Int, bandSize: Int): DataFrame = {
+    bandCandidates(sets, numHashes, bandSize)
+      .join(sets.select(col("id").as("id_a"), col("_grams").as("_ga"),
+        col("_sz").as("_sa")), Seq("id_a"))
+      .join(sets.select(col("id").as("id_b"), col("_grams").as("_gb"),
+        col("_sz").as("_sb")), Seq("id_b"))
+      .withColumn("_i",
+        graft.functions.sortedIntersectCount(col("_ga"), col("_gb")))
+      .withColumn("jaccard", col("_i").cast("double") /
+        (col("_sa") + col("_sb") - col("_i")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  /** Banded minhash candidate pairs (id_a < id_b) over a [[shingleSets]]
+    * frame — the candidate stage the LSH-gated exact joins share.
+    */
+  private def bandCandidates(
+      sets: DataFrame, numHashes: Int, bandSize: Int): DataFrame = {
     require(numHashes % bandSize == 0,
       s"numHashes ($numHashes) must be a multiple of bandSize ($bandSize):" +
         " leftover signature positions would be silently dropped," +
         " quietly lowering recall versus the configured hash budget")
     val numBands = numHashes / bandSize
-    val sigs = minhashSignatures(df, idCol, textCol, shingleN, numHashes)
+    val sigs = minhashSignaturesFrom(sets, numHashes)
     val banded = sigs.select(col("id"),
       posexplode(bandBuckets(col("sig"), numBands, bandSize))
         .as(Seq("band", "bucket")))
     // same ReuseExchange-over-broadcast reasoning as minhashLshPairs
-    val cand = banded.as("a").hint("shuffle_hash").join(banded.as("b"),
+    banded.as("a").hint("shuffle_hash").join(banded.as("b"),
         col("a.band") === col("b.band") &&
           col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val sets = df.select(col(idCol).as("id"),
-        sort_array(wordShingleHashes(col(textCol), shingleN)).as("_grams"))
-      .withColumn("_sz", size(col("_grams")))
-      .localCheckpoint(false) // one parse+digest pass, two pair sides
-    cand
-      .join(sets.select(col("id").as("id_a"), col("_grams").as("_ga"),
-        col("_sz").as("_sza")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("_grams").as("_gb"),
-        col("_sz").as("_szb")), Seq("id_b"))
-      .withColumn("_i",
-        graft.functions.sortedIntersectCount(col("_ga"), col("_gb")))
-      .withColumn("jaccard", col("_i").cast("double") /
-        (col("_sza") + col("_szb") - col("_i")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** LSH-gated exact CONTAINMENT join — the approximate path for the
@@ -1390,22 +1316,7 @@ object Dedup {
   private[operators] def lshContainmentPairsFrom(
       sets: DataFrame, threshold: Double,
       numHashes: Int, bandSize: Int, maxRatio: Double): DataFrame = {
-    require(numHashes % bandSize == 0,
-      s"numHashes ($numHashes) must be a multiple of bandSize ($bandSize):" +
-        " leftover signature positions would be silently dropped," +
-        " quietly lowering recall versus the configured hash budget")
-    val numBands = numHashes / bandSize
-    val sigs = minhashSignaturesFrom(sets, numHashes)
-    val banded = sigs.select(col("id"),
-      posexplode(bandBuckets(col("sig"), numBands, bandSize))
-        .as(Seq("band", "bucket")))
-    // same ReuseExchange-over-broadcast reasoning as minhashLshPairs
-    val cand = banded.as("a").hint("shuffle_hash").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
+    bandCandidates(sets, numHashes, bandSize)
       .join(sets.select(col("id").as("id_a"), col("_grams").as("_ga"),
         col("_sz").as("_sa")), Seq("id_a"))
       .join(sets.select(col("id").as("id_b"), col("_grams").as("_gb"),
@@ -1614,22 +1525,12 @@ object Dedup {
       .join(sz.select(col("id").as("id_b"), col("_z").as("_zb")), Seq("id_b"))
       .filter(greatest(col("_za"), col("_zb")).cast("double") <=
         lit(maxRatio) * least(col("_za"), col("_zb")).cast("double"))
-      .select(col("id_a"), col("id_b"), lit(1).as("_e"))
     val lsh = stratifiedContainmentPairsFrom(sets, threshold,
-        numHashes, maxRatio, recallTarget, None)
-      .select(col("id_a"), col("id_b"), lit(1).as("_l"))
-    exact.join(lsh, Seq("id_a", "id_b"), "full_outer")
-      .agg(
-        count(col("_e")).as("n_exact"),
-        count(col("_l")).as("n_lsh"),
-        count(when(col("_e").isNotNull && col("_l").isNotNull, 1))
-          .as("n_both"))
-      .select(col("n_exact"), col("n_lsh"), col("n_both"),
-        (col("n_exact") - col("n_both")).as("n_exact_only"),
-        (col("n_lsh") - col("n_both")).as("n_lsh_only"),
-        round(when(col("n_exact") > 0,
-          col("n_both").cast("double") / col("n_exact"))
-          .otherwise(lit(1.0)), 6).as("recall"))
+      numHashes, maxRatio, recallTarget, None)
+    confusionCounts(exact, lsh)
+      .withColumn("recall", round(when(col("n_exact") > 0,
+        col("n_both").cast("double") / col("n_exact"))
+        .otherwise(lit(1.0)), 6))
   }
 
   /** `approx=auto` containment pair join — [[jaccardPairsAuto]]'s twin
@@ -1658,11 +1559,12 @@ object Dedup {
   }
 
   /** Confusion counts of [[lshContainmentPairs]] against the exact
-    * containment pair set ([[ngramContainmentPairs]] semantics), same
+    * containment pair set of [[prefixFilterContainmentPairs]], same
     * shingles both sides — [[lshRecallAudit]]'s twin for the
     * containment predicate. The gap measured is banding miss plus the
     * maxRatio domain cut. One row: n_exact, n_lsh, n_both,
-    * n_exact_only, n_lsh_only, recall (rounded 6).
+    * n_exact_only, n_lsh_only, recall (rounded 6; 1.0 when there is no
+    * exact pair).
     */
   def containmentRecallAudit(
       df: DataFrame, idCol: String, textCol: String,
@@ -1673,23 +1575,13 @@ object Dedup {
     // previously three: the exact side, the LSH side's verify sets, and
     // the LSH side's signature build)
     val sets = shingleSets(df, idCol, textCol, n)
-    val exact = prefixFilterContainmentPairsFrom(sets, threshold, None)
-      .select(col("id_a"), col("id_b"), lit(1).as("_e"))
-    val lsh = lshContainmentPairsFrom(sets, threshold,
-        numHashes, bandSize, maxRatio)
-      .select(col("id_a"), col("id_b"), lit(1).as("_l"))
-    exact.join(lsh, Seq("id_a", "id_b"), "full_outer")
-      .agg(
-        count(col("_e")).as("n_exact"),
-        count(col("_l")).as("n_lsh"),
-        count(when(col("_e").isNotNull && col("_l").isNotNull, 1))
-          .as("n_both"))
-      .select(col("n_exact"), col("n_lsh"), col("n_both"),
-        (col("n_exact") - col("n_both")).as("n_exact_only"),
-        (col("n_lsh") - col("n_both")).as("n_lsh_only"),
-        round(when(col("n_exact") > 0,
-          col("n_both").cast("double") / col("n_exact"))
-          .otherwise(lit(1.0)), 6).as("recall"))
+    confusionCounts(
+        prefixFilterContainmentPairsFrom(sets, threshold, None),
+        lshContainmentPairsFrom(sets, threshold,
+          numHashes, bandSize, maxRatio))
+      .withColumn("recall", round(when(col("n_exact") > 0,
+        col("n_both").cast("double") / col("n_exact"))
+        .otherwise(lit(1.0)), 6))
   }
 
   /** `approx=auto` Jaccard pair join: probe the prefix-filter candidate
@@ -1707,37 +1599,56 @@ object Dedup {
   def jaccardPairsAuto(
       df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, maxCandidatePairs: Long,
-      numHashes: Int = 16, bandSize: Int = 4): DataFrame =
-    try prefixFilterJaccardPairs(df, idCol, textCol, n, threshold,
-      maxCandidatePairs = Some(maxCandidatePairs))
+      numHashes: Int = 16, bandSize: Int = 4): DataFrame = {
+    // one shingle frame serves whichever route wins, as in
+    // containmentPairsAuto
+    val sets = shingleSets(df, idCol, textCol, n)
+    try prefixFilterJaccardPairsFrom(sets, threshold,
+      Some(maxCandidatePairs))
     catch {
       case _: CandidateMassExceededException =>
-        lshJaccardPairs(df, idCol, textCol, n, threshold,
-          numHashes, bandSize)
+        lshJaccardPairsFrom(sets, threshold, numHashes, bandSize)
     }
+  }
 
   /** Self-audit of the approximate dedup path: confusion counts of the
-    * banded-LSH pair set against the exact n-gram Jaccard pair set at
-    * `threshold`, SAME shingles for both sides, so the gap measured is
+    * banded-LSH pair set against the exact n-gram Jaccard pair set of
+    * [[prefixFilterJaccardPairs]] at `threshold`, SAME shingles for both
+    * sides, so the gap measured is
     * purely MinHash/banding error (recall = LSH's banding miss rate,
     * precision loss = band collisions below the threshold). Run this on
     * a sampled slice before trusting the approximate path on the full
     * corpus — the knob-tuning loop (numHashes / bandSize / minAgree)
     * every production LSH deployment needs, as a query instead of a
     * notebook. One row out: n_exact, n_lsh, n_both, n_exact_only
-    * (missed dups), n_lsh_only (spurious candidates), recall (rounded).
+    * (missed dups), n_lsh_only (spurious candidates), recall (rounded;
+    * NULL when there is no exact pair).
     */
   def lshRecallAudit(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 4, threshold: Double = 0.5,
       numHashes: Int = 16, bandSize: Int = 4,
       minAgree: Int = 8): DataFrame = {
-    val exact = ngramJaccardPairs(df, idCol, textCol, shingleN, threshold)
-      .select(col("id_a"), col("id_b"), lit(1).as("_e"))
-    val lsh = minhashLshPairs(df, idCol, textCol, shingleN, numHashes,
-        bandSize, minAgree)
-      .select(col("id_a"), col("id_b"), lit(1).as("_l"))
-    exact.join(lsh, Seq("id_a", "id_b"), "full_outer")
+    confusionCounts(
+        prefixFilterJaccardPairs(df, idCol, textCol, shingleN, threshold),
+        minhashLshPairs(df, idCol, textCol, shingleN, numHashes,
+          bandSize, minAgree))
+      // recall is undefined with no exact pairs: NULL by convention on
+      // both engines (unguarded, Spark gives NULL but DuckDB gives NaN)
+      .withColumn("recall", when(col("n_exact") === 0,
+          lit(null).cast("double"))
+        .otherwise(round(col("n_both").cast("double") / col("n_exact"), 6)))
+  }
+
+  /** Confusion counts of an approximate pair set against the exact one
+    * (both (id_a, id_b)) — the block every recall audit shares. One row:
+    * n_exact, n_lsh, n_both, n_exact_only (missed pairs), n_lsh_only
+    * (spurious pairs); each audit appends its own `recall` convention.
+    */
+  private def confusionCounts(exact: DataFrame, lsh: DataFrame): DataFrame =
+    exact.select(col("id_a"), col("id_b"), lit(1).as("_e"))
+      .join(lsh.select(col("id_a"), col("id_b"), lit(1).as("_l")),
+        Seq("id_a", "id_b"), "full_outer")
       // count(col), not sum(when): a global aggregate over ZERO rows
       // yields 0 for count but NULL for sum — an all-unique sample slice
       // must report zeros, matching the oracle's count(*) FILTER
@@ -1748,11 +1659,5 @@ object Dedup {
           .as("n_both"))
       .select(col("n_exact"), col("n_lsh"), col("n_both"),
         (col("n_exact") - col("n_both")).as("n_exact_only"),
-        (col("n_lsh") - col("n_both")).as("n_lsh_only"),
-        // recall is undefined with no exact pairs: NULL by convention on
-        // both engines (unguarded, Spark gives NULL but DuckDB gives NaN)
-        when(col("n_exact") === 0, lit(null).cast("double"))
-          .otherwise(round(col("n_both").cast("double") / col("n_exact"), 6))
-          .as("recall"))
-  }
+        (col("n_lsh") - col("n_both")).as("n_lsh_only"))
 }

@@ -66,40 +66,6 @@ object Merge {
       compareCols: Seq[String]): DataFrame =
     mergeClassify(current, updates, keys, compareCols).drop(ActionCol)
 
-  /** Two-key match of `upsert_sample` (reference lib/id3c/db/__init__.py:
-    * 182-326): an update row matches a current row on `identifier` OR
-    * `collection_identifier`; >1 distinct match is an error.
-    *
-    * Implemented as two equi-joins + a distinct-match assertion column, so
-    * both joins stay shuffle-partitioned on a single key (never a non-equi
-    * OR-join, which Spark would plan as a broadcast nested loop).
-    */
-  def upsertTwoKey(
-      current: DataFrame,
-      updates: DataFrame,
-      key1: String,
-      key2: String,
-      idCol: String): DataFrame = {
-    val byK1 = updates.as("u").join(
-      current.as("c"),
-      col(s"u.$key1") === col(s"c.$key1") && col(s"u.$key1").isNotNull,
-      "left").select(col(s"u.$key1").as("_uk1"), col(s"u.$key2").as("_uk2"),
-        col(s"c.$idCol").as("_match"))
-    val byK2 = updates.as("u").join(
-      current.as("c"),
-      col(s"u.$key2") === col(s"c.$key2") && col(s"u.$key2").isNotNull,
-      "left").select(col(s"u.$key1").as("_uk1"), col(s"u.$key2").as("_uk2"),
-        col(s"c.$idCol").as("_match"))
-    val matches = byK1.unionByName(byK2)
-      .filter(col("_match").isNotNull)
-      .groupBy("_uk1", "_uk2")
-      .agg(collect_set(col("_match")).as("_matches"))
-    // reference raises on ambiguous match; we surface it as a column the
-    // caller can assert on (fail the job) or quarantine per-record (§2.8).
-    matches.withColumn("ambiguous", size(col("_matches")) > 1)
-      .withColumn(idCol, try_element_at(col("_matches"), lit(1)))
-  }
-
   /** Stable surrogate-id allocation for `created` rows (SURVEY §1.4):
     * max(existing id) + 1..n over a deterministic order — the OUTPUT ids
     * are dense ranks over the explicit `orderBy`, never raw

@@ -222,12 +222,6 @@ object TextAnalysis {
         (col("_top").cast("double") / col("_total")).as("top_gram_frac"),
         (col("_dup").cast("double") / col("_total")).as("dup_gram_frac"))
 
-  /** Canonical-text fingerprint: md5 over lowercased, whitespace-collapsed,
-    * punctuation-stripped text — robust to formatting-only edits.
-    */
-  def canonicalFingerprint(text: Column): Column =
-    md5(trim(regexp_replace(regexp_replace(lower(text), "[\\p{Punct}]", ""), "\\s+", " ")))
-
   /** Winnowing-style rolling fingerprint set: the distinct minima of
     * hash60 over every window of `window` consecutive k-gram hashes
     * (Schleimer et al., SIGMOD 2003 — public algorithm). Used for robust

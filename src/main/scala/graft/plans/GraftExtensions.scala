@@ -71,10 +71,9 @@ object GraftExtensions {
     // Measured (same JVM tree, sf1): q56 9.5→6.8 / 14.4→4.9,
     // q147 8.8→6.5, q283 17.0→15.0 — the win is skipping the corpus
     // side's sort, which at 100 TB is the dominant exchange cost of
-    // every identifier-resolution join. Env-overridable so the driver's
-    // bench remains reproducible at other values.
+    // every identifier-resolution join.
     spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_MAX", "256m"))
+      "256m")
   }
 
   val hammingDistanceDesc: FunctionDescription = (

@@ -67,22 +67,15 @@ class CandidateMassSpec extends AnyFunSuite with BeforeAndAfterAll {
       "pair join runs") {
     val c = templateCorpus
     val e1 = intercept[CandidateMassExceededException] {
-      Dedup.ngramJaccardPairs(c, "id", "text", 2, 0.5,
+      Dedup.prefixFilterJaccardPairs(c, "id", "text", 2, 0.5,
         maxCandidatePairs = Some(100L))
     }
     assert(e1.getMessage.contains("lshJaccardPairs"))
     assert(e1.budget === 100L)
-    // the estimate is the JOIN row mass — each pair counted once per
-    // shared gram: 11 shared 2-gram shingles × C(40,2) = 8580
-    assert(e1.estimated.longValueExact() === 8580L)
-    intercept[CandidateMassExceededException] {
-      Dedup.ngramContainmentPairs(c, "id", "text", 2, 0.5,
-        maxCandidatePairs = Some(100L))
-    }
-    intercept[CandidateMassExceededException] {
-      Dedup.prefixFilterJaccardPairs(c, "id", "text", 2, 0.5,
-        maxCandidatePairs = Some(100L))
-    }
+    // the estimate is the prefix JOIN row mass — each pair counted once
+    // per shared prefix gram: 11 2-grams keep an 11 − ceil(0.5·11) + 1
+    // = 6-gram prefix, so 6 × C(40,2) = 4680
+    assert(e1.estimated.longValueExact() === 4680L)
     val e3 = intercept[CandidateMassExceededException] {
       Dedup.prefixFilterContainmentPairs(c, "id", "text", 2, 0.5,
         maxCandidatePairs = Some(100L))
@@ -133,7 +126,7 @@ class CandidateMassSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("guards pass through on a selective corpus and results are " +
       "unchanged vs the unguarded plan") {
     val c = distinctCorpus
-    assert(Dedup.ngramJaccardPairs(c, "id", "text", 2, 0.5,
+    assert(Dedup.prefixFilterJaccardPairs(c, "id", "text", 2, 0.5,
       maxCandidatePairs = Some(1000L)).count() === 0L)
     val unguarded = Dedup.prefixFilterJaccardPairs(
       templateCorpus, "id", "text", 2, 0.5).count()

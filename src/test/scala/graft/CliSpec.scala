@@ -75,6 +75,29 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(outDir + "/encounters").count() == 0)
   }
 
+  test("receive recovers a feed stranded by a crashed snapshot swap") {
+    val root = tmp()
+    val feedDir = root + "/fhir"
+    val nd1 = root + "/a.ndjson"
+    val nd2 = root + "/b.ndjson"
+    Files.writeString(java.nio.file.Path.of(nd1), bundle + "\n" + bundle + "\n")
+    Files.writeString(java.nio.file.Path.of(nd2), bundle + "\n")
+    Cli.receive(spark, feedDir, nd1)
+    // a swap that crashed between its two renames: the live feed sits in
+    // its backup, and the staged snapshot is orphaned
+    Files.move(java.nio.file.Path.of(feedDir),
+      java.nio.file.Path.of(feedDir + ".bak-1"))
+    Files.createDirectory(java.nio.file.Path.of(feedDir + ".tmp-2"))
+
+    Cli.receive(spark, feedDir, nd2)
+    val ids = spark.read.parquet(feedDir).select("id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == Seq(1L, 2L, 3L), ids)
+    val left = new java.io.File(root).list().toSeq
+      .filter(n => n.contains(".bak-") || n.contains(".tmp-"))
+    assert(left.isEmpty, left)
+  }
+
   test("one committed etl-fhir cycle runs at most 23 Spark jobs") {
     import spark.implicits._
     val feedDir = tmp() + "/fhir"

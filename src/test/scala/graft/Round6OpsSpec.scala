@@ -453,8 +453,8 @@ class Round6OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lsh = Dedup.lshJaccardPairs(docs, "doc_id", "text", shingleN = 3,
         threshold = 0.3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-        threshold = 0.3).collect()
+    val exact = Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
+        n = 3, threshold = 0.3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(lsh.nonEmpty)
     assert(lsh.keySet.subsetOf(exact.keySet))

@@ -1266,14 +1266,14 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(run(df.repartition(7)) == got)
   }
 
-  test("ngramContainmentPairs flags subset duplication Jaccard misses") {
+  test("prefixFilterContainmentPairs flags subset duplication Jaccard misses") {
     import spark.implicits._
     val short = "alpha beta gamma delta"
     val long = "intro words here " + short + " plus a much longer tail " +
       "of unrelated filler content extending the article body"
     val df = Seq((1L, short), (2L, long), (3L, "nothing shared at all here"))
       .toDF("doc_id", "text")
-    val cont = Dedup.ngramContainmentPairs(df, "doc_id", "text",
+    val cont = Dedup.prefixFilterContainmentPairs(df, "doc_id", "text",
         n = 3, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3))).toSeq
@@ -1281,7 +1281,7 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cont.map(p => (p._1, p._2)) == Seq((1L, 2L)))
     assert(cont.head._3 == 1.0 && cont.head._4 < 0.5)
     // Jaccard at the same bar misses the pair entirely
-    assert(Dedup.ngramJaccardPairs(df, "doc_id", "text",
+    assert(Dedup.prefixFilterJaccardPairs(df, "doc_id", "text",
       n = 3, threshold = 0.9).isEmpty)
   }
 
@@ -1330,7 +1330,21 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Map("x" -> 2L)) // 2*2 > 3; y: 1*2 < 3
   }
 
-  test("prefixFilterJaccardPairs equals the full inverted-index join") {
+  /** Driver-side reference for the exact set-similarity joins: every
+    * document's distinct word 3-grams as a Scala `Set`, and the pairs
+    * (a < b) sharing at least one gram with their intersection size —
+    * no Spark operator computes the predicate. */
+  private def refOverlaps(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Long, Set[String], Set[String], Int)] = {
+    val sets = df.select(col("doc_id"), Dedup.wordShingles(col("text"), 3))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toSeq
+    for {
+      (a, ga) <- sets; (b, gb) <- sets if a < b
+      i = (ga & gb).size if i > 0
+    } yield (a, b, ga, gb, i)
+  }
+
+  test("prefixFilterJaccardPairs equals a driver-side exact Jaccard reference") {
     import spark.implicits._
     import graft.operators.Dedup
     val docsDf = Seq(
@@ -1343,17 +1357,17 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (7L, "short text"),
       (8L, "short text")                                     // dup of 7
     ).toDF("doc_id", "text")
+    val overlaps = refOverlaps(docsDf)
     for (t <- Seq(0.5, 0.7, 0.9)) {
-      val full = Dedup.ngramJaccardPairs(docsDf, "doc_id", "text", 3, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val full = overlaps.map { case (a, b, ga, gb, i) =>
+        (a, b, i.toDouble / (ga.size + gb.size - i)) }.filter(_._3 >= t).toSet
       val pf = Dedup.prefixFilterJaccardPairs(docsDf, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(pf == full, s"t=$t")
+      assert(full.nonEmpty && pf == full, s"t=$t")
     }
   }
 
-  test("prefixFilterContainmentPairs equals the full inverted-index join " +
-      "(random corpora, several thresholds)") {
+  test("prefixFilterContainmentPairs equals a driver-side reference") {
     import spark.implicits._
     import graft.operators.Dedup
     val rnd = new scala.util.Random(83)
@@ -1370,16 +1384,20 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .mkString(" "))
     }
     val docsDf = (base ++ quoted).toDF("doc_id", "text")
+    // Spark's round(x, 6) on a double is HALF_UP over BigDecimal(x)
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val overlaps = refOverlaps(docsDf)
     for (t <- Seq(0.4, 0.5, 0.7)) {
-      val full = Dedup.ngramContainmentPairs(docsDf, "doc_id", "text", 3, t)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-        .toSet
+      val full = overlaps.map { case (a, b, ga, gb, i) =>
+          (a, b, round6(i.toDouble / ga.size), round6(i.toDouble / gb.size)) }
+        .filter(p => math.max(p._3, p._4) >= t).toSet
       val pf = Dedup.prefixFilterContainmentPairs(docsDf, "doc_id", "text", 3, t)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
         .toSet
-      assert(pf == full, s"t=$t missing=${(full -- pf).take(3)} " +
+      assert(full.nonEmpty && pf == full,
+        s"t=$t missing=${(full -- pf).take(3)} " +
         s"extra=${(pf -- full).take(3)}")
     }
   }
