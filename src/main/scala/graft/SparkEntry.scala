@@ -1403,7 +1403,9 @@ object SparkEntry {
   /** Connected components on a long-diameter graph (50-node chains) —
     * the chain-shaped dup graph where min-label propagation would need
     * O(diameter) rounds and [[Dedup.connectedComponents]]' large-star /
-    * small-star contraction needs O(log n).
+    * small-star contraction needs O(log n). An edge set under the
+    * session's broadcast threshold needs no round at all: it is finished
+    * by union-find on the driver.
     */
   private def q79CcChain(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select($("doc_id"))

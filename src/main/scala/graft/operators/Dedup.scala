@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Thrown by the exact set-similarity family's candidate-mass circuit
   * breaker (see [[Dedup.candidateMassStats]]): the cheap pre-estimate of
@@ -813,6 +817,21 @@ object Dedup {
     * decimal(38,0): ANSI mode makes a long sum an overflow error, and
     * trillions of 2^63-scale hashes genuinely can overflow at corpus
     * scale.
+    *
+    * Driver finish: the signature's count is the edge set's size, so
+    * before the first round and after each one the loop knows, at no
+    * extra job, whether the edges are small. Small means Catalyst's own
+    * broadcast test (Armbrust et al., "Spark SQL", SIGMOD 2015): count ×
+    * [[EstimationUtils.getSizePerRow]] of the edge columns at most
+    * `spark.sql.autoBroadcastJoinThreshold`, a relation small enough to
+    * ship to one place. A small edge set is collected (one job) and
+    * finished by union-find on the driver (see [[unionFindLabels]]). This
+    * is exact from ANY round: every star preserves the components and
+    * their vertex sets, and the union-find labels each component with its
+    * minimum under Spark's own ordering of the id type — the fixed point
+    * the star loop would reach. At corpus scale the edge set never fits
+    * and the star loop runs unchanged; a threshold of -1 switches the
+    * driver finish off, as it switches off broadcast joins.
     */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     def canon(e: DataFrame): DataFrame =
@@ -824,18 +843,27 @@ object Dedup {
       e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v"))),
         sum(xxhash64(col("v"), col("u")).cast("decimal(38,0)")))
         .head().toSeq
+    // at convergence the edge set is a star forest rooted at each
+    // component's minimum: (root, node) pairs + roots labeling themselves
+    def starLabels(e: DataFrame): DataFrame =
+      e.select(col("v").as("id"), col("u").as("cluster_id"))
+        .unionByName(e.select(col("u").as("id"), col("u").as("cluster_id"))
+          .distinct())
     var edges = canon(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
       .localCheckpoint(false)
+    val qe = edges.queryExecution
+    val threshold = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rowBytes = EstimationUtils.getSizePerRow(qe.analyzed.output)
+    def fitsDriver(sig: Seq[Any]): Boolean =
+      threshold >= 0 && rowBytes * sig.head.asInstanceOf[Long] <= threshold
     var sig: Seq[Any] = signature(edges)
     var round = 0
     var converged = false
     // m = min of the closed neighborhood of u, one window shuffle per star
-    def withMin(sym: DataFrame): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
+    def withMin(sym: DataFrame): DataFrame =
       sym.withColumn("m",
         least(min(col("v")).over(Window.partitionBy("u")), col("u")))
-    }
-    while (!converged && round < maxRounds) {
+    while (!converged && !fitsDriver(sig) && round < maxRounds) {
       val sym = edges.unionByName(
         edges.select(col("v").as("u"), col("u").as("v")))
       // large-star: strictly larger neighbors hook onto the neighborhood min
@@ -861,19 +889,54 @@ object Dedup {
       edges = next
       round += 1
     }
+    if (converged) starLabels(edges)
+    else if (fitsDriver(sig)) unionFindLabels(edges, starLabels(edges).schema)
     // silent divergence is worse than a loud cap: an unconverged edge set
     // is not yet a star forest, so it would return NON-minimal labels
     // that disagree with any recursive-closure oracle (review r8) —
     // every converged caller is unaffected, an unconverged one must say so
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds — " +
-          "raise maxRounds")
-    // at convergence the edge set is a star forest rooted at each
-    // component's minimum: (root, node) pairs + roots labeling themselves
-    edges.select(col("v").as("id"), col("u").as("cluster_id"))
-      .unionByName(edges.select(col("u").as("id"), col("u").as("cluster_id"))
-        .distinct())
+    else throw new IllegalStateException(
+      s"connectedComponents did not converge in $maxRounds rounds — " +
+        "raise maxRounds")
+  }
+
+  /** The driver finish of [[connectedComponents]]: collect the canonical
+    * (u, v) edges, give each distinct id its rank under Spark's ordering
+    * of the id type (`UTF8String` byte order for strings, which is not
+    * `String.compareTo`'s UTF-16 order), and run union-find over the
+    * ranks. Union by smaller index keeps every root its component's
+    * smallest rank, i.e. its minimum id. Returns the star loop's (id,
+    * cluster_id) rows under `schema` as a local frame; an id with no edge
+    * has no row, as there.
+    */
+  private def unionFindLabels(edges: DataFrame, schema: StructType): DataFrame = {
+    val dt = schema("id").dataType
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    // endpoint 2i is edge i's u, endpoint 2i + 1 its v
+    val ends = edges.collect().flatMap(r => Array(r.get(0), r.get(1)))
+    val keys = ends.map(toCatalyst)
+    val sorted = Array.range(0, ends.length).sorted(Ordering.by(keys(_: Int))(ord))
+    val rank = new Array[Int](ends.length)
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    for (j <- sorted.indices) {
+      if (j == 0 || ord.compare(keys(sorted(j - 1)), keys(sorted(j))) != 0)
+        ids += ends(sorted(j))
+      rank(sorted(j)) = ids.length - 1
+    }
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (i <- 0 until ends.length / 2) {
+      val (a, b) = (find(rank(2 * i)), find(rank(2 * i + 1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val labels = ids.indices.map(j => Row(ids(j), ids(find(j))))
+    edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(labels: _*), schema)
   }
 
   /** Dedup finalization: keep ONE representative document per near-dup

@@ -187,7 +187,9 @@ object Receiving {
     * starts) runs [[recoverSwap]], which rolls a stranded `.bak-*` back
     * into place — the rename-back is one atomic metadata op, so a crashed
     * swap behaves like the reference's rolled-back transaction: the old
-    * snapshot stays live, the orphaned `.tmp-*` is swept.
+    * snapshot stays live, the orphaned `.tmp-*` is swept. A rename that
+    * reports failure throws an `IOException` naming both paths, before
+    * the backup is deleted.
     */
   def snapshotSwap(df: DataFrame, dir: String, dryRun: Boolean = false): Unit = {
     val tmp = s"$dir.tmp-${System.currentTimeMillis()}"
@@ -201,8 +203,13 @@ object Receiving {
     } else {
       val dst = new org.apache.hadoop.fs.Path(dir)
       val bak = new org.apache.hadoop.fs.Path(s"$dir.bak-${System.currentTimeMillis()}")
-      if (fs.exists(dst)) fs.rename(dst, bak)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+      val staged = new org.apache.hadoop.fs.Path(tmp)
+      if (fs.exists(dst) && !fs.rename(dst, bak))
+        throw new java.io.IOException(s"snapshotSwap: could not rename $dst to $bak")
+      // the backup stays put when the second rename fails: recoverSwap
+      // rolls it back on the next read or swap
+      if (!fs.rename(staged, dst))
+        throw new java.io.IOException(s"snapshotSwap: could not rename $staged to $dst")
       if (fs.exists(bak)) fs.delete(bak, true)
       ()
     }
@@ -215,24 +222,28 @@ object Receiving {
     spark.read.parquet(dir)
   }
 
-  /** Roll back a swap that crashed between its two renames: if `dir` is
-    * missing but `.bak-*` siblings exist, the newest backup is renamed
-    * back into place (atomic) and orphaned `.tmp-*` staging dirs are
-    * swept. No-op when `dir` is live.
+  /** Recover from a crashed swap. If `dir` is missing but `.bak-*`
+    * siblings exist, the swap died between its two renames: the newest
+    * backup is renamed back into place (atomic) and the older ones are
+    * deleted. Orphaned `.tmp-*` staging dirs are swept in every case, live
+    * `dir` or not: a swap that died during its parquet write leaves one
+    * next to a live table. Assumes a single writer per table and no read
+    * concurrent with its swap: the `.tmp-*` of a swap still running in
+    * another process would be swept too, and a read inside the rename
+    * window would roll that swap back.
     */
   def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
+    def siblings(suffix: String) = Option(fs.globStatus(
+      new org.apache.hadoop.fs.Path(s"$dir.$suffix-*"))).getOrElse(Array.empty)
     val dst = new org.apache.hadoop.fs.Path(dir)
     if (!fs.exists(dst)) {
-      val baks = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$dir.bak-*"))).getOrElse(Array.empty)
+      val baks = siblings("bak")
       if (baks.nonEmpty) {
         val newest = baks.maxBy(_.getPath.getName)
         fs.rename(newest.getPath, dst)
         baks.filterNot(_ eq newest).foreach(b => fs.delete(b.getPath, true))
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir.tmp-*")))
-          .getOrElse(Array.empty)
-          .foreach(t => fs.delete(t.getPath, true))
       }
     }
+    siblings("tmp").foreach(t => fs.delete(t.getPath, true))
   }
 }

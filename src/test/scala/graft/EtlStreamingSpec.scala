@@ -178,6 +178,19 @@ class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getString(1)).toSeq == Seq("c"))
   }
 
+  test("openSnapshot sweeps a staging dir left by a swap that died writing") {
+    import spark.implicits._
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val dir = Files.createTempDirectory("graft_swap").toString + "/table"
+    Receiving.snapshotSwap(Seq((1L, "a")).toDF("id", "v"), dir)
+    // the crash came before the first rename: dir is live, no backup
+    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$dir.tmp-999")
+    assert(Receiving.openSnapshot(spark, dir).collect()
+      .map(_.getString(1)).toSeq == Seq("a"))
+    assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir.tmp-*")).isEmpty)
+  }
+
   test("Etl.upsertSamples same-batch same-key updates fold deterministically") {
     import spark.implicits._
     val cur = Seq((1L, "A1", "C1", """{"x":0}"""))

@@ -1035,7 +1035,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-    for (cut <- Seq(0.0, 0.5, 1.0)) {
+    for (cut <- Seq(0.0, 0.5, 1.0)) CcPaths.foreach(spark) { path =>
       val n = (edges.size * cut).toInt
       val (oldE, newE) = edges.splitAt(n)
       val full = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
@@ -1048,7 +1048,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
           if (newE.isEmpty) Seq.empty[(Long, Long)].toDF("id_a", "id_b")
           else newE.toDF("id_a", "id_b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(inc == full, s"cut=$cut diff=${
+      assert(inc == full, s"$path cut=$cut diff=${
         inc.collect { case (k, v) if full.get(k) != Some(v) => (k, v) }.take(5)}")
     }
   }

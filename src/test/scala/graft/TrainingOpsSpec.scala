@@ -200,11 +200,13 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ring = (100L until 104L).map(i => (i, i + 1)) :+ (104L, 100L)
     val pair = Seq((500L, 501L))
     val pairs = (chain ++ ring ++ pair).toDF("id_a", "id_b")
-    val alt = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ref = unionFindCc(chain ++ ring ++ pair)
-    assert(alt == ref)
-    assert(alt(59L) == 0L && alt(104L) == 100L && alt(501L) == 500L)
+    CcPaths.foreach(spark) { path =>
+      val alt = Dedup.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(alt == ref, path)
+      assert(alt(59L) == 0L && alt(104L) == 100L && alt(501L) == 500L, path)
+    }
   }
 
   test("connectedComponents matches union-find on a random-ish dense graph") {
@@ -214,10 +216,11 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(i => ((i * 7919) % 80, (i * 104729) % 80))
       .filter { case (a, b) => a != b }
     val pairs = edges.toDF("id_a", "id_b")
-    val alt = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ref = unionFindCc(edges)
-    assert(alt == ref)
+    CcPaths.foreach(spark) { path =>
+      val alt = Dedup.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(alt == unionFindCc(edges), path)
+    }
   }
 
   test("connectedComponents labels string ids with the least reachable id") {
@@ -229,18 +232,63 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("ring c", "ring b"), ("ring b", "ring d"))
     val pair = Seq(("old anvil", "old anvils"))
     val edges = chain ++ ring ++ pair
-    val cc = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(cc == unionFindCc(edges))
-    assert(cc("chain 11") == "chain 00" && cc("ring d") == "ring a" &&
-      cc("old anvils") == "old anvil")
+    CcPaths.foreach(spark) { path =>
+      val cc = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc == unionFindCc(edges), path)
+      assert(cc("chain 11") == "chain 00" && cc("ring d") == "ring a" &&
+        cc("old anvils") == "old anvil", path)
+    }
+  }
+
+  test("connectedComponents orders string ids by UTF-8 bytes, not UTF-16") {
+    import spark.implicits._
+    // U+FF61 is EF BD A1 in UTF-8 and U+1F600 is F0 9F 98 80, so "｡" sorts
+    // first by bytes; as UTF-16, U+1F600's high surrogate D83D sorts first
+    val edges = Seq(("｡x", "😀x"), ("😀a", "｡b"), ("｡b", "😀c"))
+    assert("😀x" < "｡x")
+    val utf8 = Ordering.fromLessThan[String]((a, b) => java.util.Arrays
+      .compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0)
+    val ref = unionFindCc(edges)(utf8)
+    assert(ref("😀x") == "｡x" && ref("😀a") == "｡b")
+    CcPaths.foreach(spark) { path =>
+      val cc = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc == ref, path)
+    }
+  }
+
+  test("connectedComponents finishes a small graph in 4 jobs") {
+    import spark.implicits._
+    val pairs = ((0L until 59L).map(i => (i, i + 1)) :+ ((500L, 501L)))
+      .toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val cc = try {
+      val cc = Dedup.connectedComponents(pairs)
+      org.apache.spark.ListenerBusDrain(sc)
+      cc
+    } finally sc.removeSparkListener(listener)
+    // three for the signature, which also fills the edge checkpoint (AQE
+    // runs the distinct's and the aggregate's shuffle stages as jobs of
+    // their own), and one for the collect; no star round
+    assert(jobs.get() == 4, s"${jobs.get()} jobs")
+    assert(cc.count() == 62)
   }
 
   test("connectedComponents throws when it has not converged in maxRounds") {
     import spark.implicits._
     val chain = (0L until 59L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    // only the star loop can run out of rounds
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxRounds = 1)
+      CcPaths.starLoop(spark)(Dedup.connectedComponents(chain, maxRounds = 1))
     }
     assert(e.getMessage.contains("did not converge in 1 rounds"))
   }
