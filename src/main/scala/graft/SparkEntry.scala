@@ -721,12 +721,14 @@ object SparkEntry {
     * path key includes the canonicalized plan hash, so code changes to the
     * feed builder invalidate stale materializations, and a fingerprint of
     * `dir`'s listing, so new data written behind the same path does too.
+    * The feed is read back with the schema it was written with, so no
+    * parquet footer-inference job runs.
     */
   private[graft] def materializedFeed(
       s: SparkSession, name: String, dir: String)(
       build: => DataFrame): DataFrame = {
     val inputs = inputFingerprint(dir)
-    feedPathMemo.computeIfAbsent((name, dir, inputs), _ => {
+    val (path, schema) = feedPathMemo.computeIfAbsent((name, dir, inputs), _ => {
       val feed = build
       // canonicalized normalizes attribute exprIds but NOT the fresh names
       // of higher-order-function lambda variables (`lambda 'x_17` — a
@@ -740,8 +742,9 @@ object SparkEntry {
         s"${name}_${Integer.toHexString(dir.hashCode)}_${inputs}_$planHash")
         .getPath
       writeFeedIfAbsent(s, feed, path)
-      path
-    }) match { case path => s.read.parquet(path) }
+      (path, feed.schema)
+    })
+    s.read.schema(schema).parquet(path)
   }
 
   /** Name, size and modification time of every entry of `dir`, hashed:
@@ -755,12 +758,12 @@ object SparkEntry {
         .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
         .mkString("|").hashCode)
 
-  /** Memo of materialized feed paths per (name, input dir, input
-    * fingerprint): building the feed plan and canonicalizing it just to
-    * learn the path costs driver-side CPU on a HUGE expression tree — pay
-    * it once per session and input version, not once per bench pass. */
+  /** Memo of materialized feed paths and schemas per (name, input dir,
+    * input fingerprint): building the feed plan and canonicalizing it just
+    * to learn the path costs driver-side CPU on a HUGE expression tree —
+    * pay it once per session and input version, not once per bench pass. */
   private val feedPathMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), String]()
+    (String, String, String), (String, org.apache.spark.sql.types.StructType)]()
 
   private def writeFeedIfAbsent(
       s: SparkSession, feed: DataFrame, path: String): Unit = {

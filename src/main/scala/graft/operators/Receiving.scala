@@ -225,12 +225,13 @@ object Receiving {
   /** Recover from a crashed swap. If `dir` is missing but `.bak-*`
     * siblings exist, the swap died between its two renames: the newest
     * backup is renamed back into place (atomic) and the older ones are
-    * deleted. Orphaned `.tmp-*` staging dirs are swept in every case, live
-    * `dir` or not: a swap that died during its parquet write leaves one
-    * next to a live table. Assumes a single writer per table and no read
-    * concurrent with its swap: the `.tmp-*` of a swap still running in
-    * another process would be swept too, and a read inside the rename
-    * window would roll that swap back.
+    * deleted; when that rename fails it throws an `IOException` and
+    * deletes nothing. Orphaned `.tmp-*` staging dirs are swept in every
+    * case, live `dir` or not: a swap that died during its parquet write
+    * leaves one next to a live table. Assumes a single writer per table
+    * and no read concurrent with its swap: the `.tmp-*` of a swap still
+    * running in another process would be swept too, and a read inside the
+    * rename window would roll that swap back.
     */
   def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
     def siblings(suffix: String) = Option(fs.globStatus(
@@ -240,7 +241,11 @@ object Receiving {
       val baks = siblings("bak")
       if (baks.nonEmpty) {
         val newest = baks.maxBy(_.getPath.getName)
-        fs.rename(newest.getPath, dst)
+        // checked before any backup is deleted: a feed left unrestored
+        // would make the next receive number its delivery from id 1
+        if (!fs.rename(newest.getPath, dst))
+          throw new java.io.IOException(
+            s"recoverSwap: could not rename ${newest.getPath} to $dst")
         baks.filterNot(_ eq newest).foreach(b => fs.delete(b.getPath, true))
       }
     }

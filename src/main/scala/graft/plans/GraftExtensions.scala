@@ -3,9 +3,14 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GreaterThan, LessThanOrEqual, Literal, RLike, RegExpCount, RegExpExtractAll, Size}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, CreateStruct, EqualTo, Expression, ExpressionInfo, GetMapValue, GetStructField, GreaterThan, IsNotNull, IsNull, LessThanOrEqual, Literal, PredicateHelper, RLike, RegExpCount, RegExpExtractAll, Size}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, Join, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{JOIN, LOCAL_RELATION}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, CollationFactory, GenericArrayData}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType, LongType, MapType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 import graft.functions.{CdcBoundaries, DeflatedLength, FloatDot, HammingDistance, HammingDistanceLte, Int8Dot, JsonScalarField, NfcNormalize, SortedIntersectCount, WinnowMinima, WordNgramHash60, WordNgrams}
 
@@ -19,7 +24,14 @@ import graft.functions.{CdcBoundaries, DeflatedLength, FloatDot, HammingDistance
   *     reference maintains by hand (id3c functions/hamming_distance.sql:
   *     5-60, where `_lte` exists precisely because the thresholded form
   *     "can return early"). Here the optimizer applies that rewrite
-  *     automatically, so users can write the natural predicate.
+  *     automatically, so users can write the natural predicate;
+  *   - injects [[RegexpCountExistenceRewrite]] (`regexp_count(x, p) > 0`
+  *     → `x RLIKE p`);
+  *   - injects [[LocalLookupJoin]], which turns an equi-join against a
+  *     small table written in the query (sampling rates, relation
+  *     priorities, organism lineages, query terms) into a per-row lookup
+  *     in a map literal: no broadcast job, and no hash relation, whose
+  *     string-keyed form holds a whole memory page per join.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -28,6 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.allFunctions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => HammingThresholdRewrite)
     ext.injectOptimizerRule(_ => RegexpCountExistenceRewrite)
+    ext.injectOptimizerRule(_ => LocalLookupJoin)
   }
 }
 
@@ -57,7 +70,8 @@ object GraftExtensions {
       org.apache.spark.sql.GraftSqlBridge
         .registerFunction(spark, id, info, builder)
     }
-    val rules = Seq(HammingThresholdRewrite, RegexpCountExistenceRewrite)
+    val rules =
+      Seq(HammingThresholdRewrite, RegexpCountExistenceRewrite, LocalLookupJoin)
     val cur = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
       cur ++ rules.filterNot(cur.contains)
@@ -224,4 +238,142 @@ object RegexpCountExistenceRewrite extends Rule[LogicalPlan] {
       case GreaterThan(RegExpCount(x, pat @ Literal(_, _)), Literal(0, _)) =>
         RLike(x, pat)
     }
+}
+
+/** An equi-join whose small side is a [[LocalRelation]] (a table written
+  * in the query) or a union of them → a lookup of the join key in a map
+  * literal built from the table's rows, evaluated in the other side's row
+  * pipeline.
+  *
+  * Spark would plan the join as a broadcast hash join: a broadcast job,
+  * and, for a non-integral key, an `UnsafeHashedRelation` that takes a
+  * whole memory page (`spark.buffer.pageSize`, 32 MB on a 4 GB driver
+  * with 4 cores) for a 5-row table and keeps it until the ContextCleaner
+  * drops the broadcast. The lookup needs neither.
+  *
+  * Fires only when all of these hold, else the join is left alone:
+  *   - Inner with either side local, or LeftOuter/LeftSemi/LeftAnti with
+  *     the right side local;
+  *   - every equality conjunct compares an expression of the other side
+  *     with a column of the local side, and any other conjunct (the
+  *     residual) appears only on Inner, where it becomes a filter;
+  *   - the key types have binary equality (integral, date, timestamp,
+  *     boolean, UTF8_BINARY string), so map-key equality is the join's
+  *     equality; a multi-column key is a struct of them;
+  *   - the local keys are non-null and unique, so a lookup finds at most
+  *     the one row the join would match;
+  *   - the table has at most [[MaxRows]] rows;
+  *   - the query named no join strategy other than `broadcast` (whose
+  *     intent, no shuffle of the large side, the lookup meets), so a
+  *     `shuffle_hash` or `merge` hint keeps its join.
+  *
+  * `GetMapValue` returns null for a null or absent key (never an ANSI
+  * error), which is exactly "no match": Inner and LeftSemi drop the row,
+  * LeftOuter null-fills the local columns, LeftAnti keeps the row. A
+  * probe struct with a null field equals no key, as a null key column
+  * matches nothing in the join. The local columns keep their `exprId`s
+  * through `Alias`, so the plan above reads them unchanged.
+  */
+object LocalLookupJoin extends Rule[LogicalPlan] with PredicateHelper {
+
+  /** `GetMapValue` probes `ArrayBasedMapData` linearly, one key
+    * comparison per table row for every probed row, where a hash join's
+    * probe costs the same at any table size. Past a few dozen rows the
+    * broadcast hash join is the cheaper plan per row.
+    */
+  val MaxRows = 64
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithPruning(_.containsAllPatterns(JOIN, LOCAL_RELATION)) {
+      case j @ Join(left, right, jt, cond, hint)
+          if Seq(hint.leftHint, hint.rightHint).flatten.flatMap(_.strategy)
+            .forall(_ == BROADCAST) =>
+        val onRight = right match {
+          case Local(output, rows)
+              if jt == Inner || jt == LeftOuter || jt == LeftSemi || jt == LeftAnti =>
+            lookup(left, output, rows, jt, cond, localOnRight = true)
+          case _ => None
+        }
+        onRight.orElse(left match {
+          case Local(output, rows) if jt == Inner =>
+            lookup(right, output, rows, jt, cond, localOnRight = false)
+          case _ => None
+        }).getOrElse(j)
+    }
+
+  /** A batch `LocalRelation`, or a union of them (Catalyst folds a
+    * filter, limit or projection of a local table into a new
+    * `LocalRelation`, but leaves a union of several as a `Union`):
+    * its output and rows. */
+  private object Local {
+    def unapply(p: LogicalPlan): Option[(Seq[Attribute], Seq[InternalRow])] = p match {
+      case l: LocalRelation if !l.isStreaming => Some((l.output, l.data))
+      case u: Union if !u.byName && u.children.forall {
+          case l: LocalRelation => !l.isStreaming
+          case _ => false
+        } =>
+        Some((u.output, u.children.flatMap(_.asInstanceOf[LocalRelation].data)))
+      case _ => None
+    }
+  }
+
+  private def binaryEquality(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+        TimestampType | TimestampNTZType | BooleanType => true
+    case st: StringType => st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID
+    case _ => false
+  }
+
+  private def lookup(other: LogicalPlan, output: Seq[Attribute],
+      data: Seq[InternalRow], jt: JoinType, cond: Option[Expression],
+      localOnRight: Boolean): Option[LogicalPlan] = {
+    if (data.length > MaxRows) return None
+    val (keys, residual) =
+      cond.toSeq.flatMap(splitConjunctivePredicates).partitionMap {
+        case EqualTo(a, b: Attribute) if isKey(a, b, other, output) => Left(a -> b)
+        case EqualTo(b: Attribute, a) if isKey(a, b, other, output) => Left(a -> b)
+        case c => Right(c)
+      }
+    if (keys.isEmpty || (residual.nonEmpty && jt != Inner)) return None
+    val ordinals = keys.map { case (_, b) => output.indexWhere(_.exprId == b.exprId) }
+    val rows = data.map(_.copy())
+    val keyValues = rows.map(r => ordinals.map(i => r.get(i, output(i).dataType)))
+    if (keyValues.exists(_.contains(null)) || keyValues.distinct.length != rows.length)
+      return None
+
+    val (probe, mapKeys) =
+      if (keys.length == 1) (keys.head._1, keyValues.map(_.head))
+      else (CreateStruct(keys.map(_._1)), keyValues.map(v => InternalRow.fromSeq(v)))
+    val valueType = StructType(output.map(a =>
+      StructField(a.name, a.dataType, a.nullable, a.metadata)))
+    val table = Literal(
+      new ArrayBasedMapData(new GenericArrayData(mapKeys), new GenericArrayData(rows)),
+      MapType(probe.dataType, valueType, valueContainsNull = false))
+    val found = GetMapValue(table, probe)
+
+    Some(jt match {
+      case LeftSemi => Filter(IsNotNull(found), other)
+      case LeftAnti => Filter(IsNull(found), other)
+      case _ =>
+        val probed = Project(other.output :+ Alias(found, "_lookup")(), other)
+        val kept = if (jt == Inner) Filter(IsNotNull(probed.output.last), probed) else probed
+        // Filter(isnotnull) marks the lookup non-null, so each local
+        // column keeps the nullability the join gave it
+        val row = kept.output.last
+        val cols = output.zipWithIndex.map { case (a, i) =>
+          Alias(GetStructField(row, i, Some(a.name)), a.name)(
+            exprId = a.exprId, qualifier = a.qualifier, explicitMetadata = Some(a.metadata))
+        }
+        val joined = Project(if (localOnRight) other.output ++ cols else cols ++ other.output, kept)
+        residual.reduceOption(And).map(Filter(_, joined)).getOrElse(joined)
+    })
+  }
+
+  /** `a = b` is a lookup key: b a local column of a binary-equality type,
+    * a a deterministic expression of the other side of the same type. */
+  private def isKey(a: Expression, b: Attribute, other: LogicalPlan,
+      output: Seq[Attribute]): Boolean =
+    output.exists(_.exprId == b.exprId) && a.deterministic &&
+      a.references.subsetOf(other.outputSet) && a.dataType == b.dataType &&
+      binaryEquality(b.dataType)
 }

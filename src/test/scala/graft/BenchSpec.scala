@@ -50,4 +50,41 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
         .foreach(deleteDirectory)
     }
   }
+
+  test("SparkEntry.materializedFeed reads a memoized feed back with no job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-feed").toFile
+    val table = s"$dir/t.parquet"
+    def feed() =
+      SparkEntry.materializedFeed(spark, "spec_pinned", dir.getPath)(
+        spark.read.parquet(table).select(($"x" * 2).as("y")))
+    try {
+      Seq(1L, 2L).toDF("x").write.parquet(table)
+      assert(feed().as[Long].collect().toSet == Set(2L, 4L))
+      val sc = spark.sparkContext
+      val jobs = new AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      val again = try {
+        val again = feed()
+        org.apache.spark.ListenerBusDrain(sc)
+        again
+      } finally sc.removeSparkListener(listener)
+      // a bare read of the path would infer its schema from the parquet
+      // footers in a job of its own
+      assert(jobs.get() == 0, s"${jobs.get()} jobs")
+      assert(again.as[Long].collect().toSet == Set(2L, 4L))
+    } finally {
+      import org.apache.commons.io.FileUtils.deleteDirectory
+      deleteDirectory(dir)
+      new java.io.File(Scratchspace.root, "graft_feeds")
+        .listFiles((_: java.io.File, n: String) => n.startsWith("spec_pinned_"))
+        .foreach(deleteDirectory)
+    }
+  }
 }

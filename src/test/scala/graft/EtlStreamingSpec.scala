@@ -191,6 +191,24 @@ class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir.tmp-*")).isEmpty)
   }
 
+  test("recoverSwap throws and deletes no backup when its roll-back rename fails") {
+    import spark.implicits._
+    val fs = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def rename(src: org.apache.hadoop.fs.Path,
+          dst: org.apache.hadoop.fs.Path): Boolean = false
+    }
+    fs.initialize(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    val dir = Files.createTempDirectory("graft_swap").toString + "/table"
+    // the crash came between the renames of two swaps: no live dir
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir.bak-1")
+    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$dir.bak-2")
+    val e = intercept[java.io.IOException](Receiving.recoverSwap(fs, dir))
+    assert(e.getMessage.contains(s"$dir.bak-2") && e.getMessage.endsWith(dir),
+      e.getMessage)
+    assert(Seq("bak-1", "bak-2").forall(b => new java.io.File(s"$dir.$b").isDirectory))
+  }
+
   test("Etl.upsertSamples same-batch same-key updates fold deterministically") {
     import spark.implicits._
     val cur = Seq((1L, "A1", "C1", """{"x":0}"""))

@@ -59,6 +59,15 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("*("), p.take(3000))
   }
 
+  test("q69 stratum rates are an in-row lookup: no broadcast, no hash relation") {
+    val df = SparkEntry.queries("q69_stratified_sample")(spark, dir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p.take(500))
+    assert(!p.contains("BroadcastExchange"), p.take(3000))
+    assert(!p.contains("BroadcastHashJoin"), p.take(3000))
+  }
+
   test("q22 LSH band self-join is an equi join, never a cartesian product") {
     val p = plan("q22_minhash_pairs")
     assert(!p.contains("CartesianProduct"), "band join degenerated")
