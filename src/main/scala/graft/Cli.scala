@@ -101,7 +101,7 @@ object Cli {
     * after the current maximum (the reference's bigserial).
     */
   def receive(spark: SparkSession, feedDir: String, ndjson: String): Unit = {
-    val existing = readFeedIfAny(spark, feedDir)
+    val existing = Receiving.openSnapshot(spark, feedDir, Receiving.schema)
     val startId = existing.map(
       _.agg(coalesce(max(col("id")), lit(0L))).head().getLong(0)).getOrElse(0L)
     val fresh = Receiving.fromDocuments(
@@ -116,7 +116,8 @@ object Cli {
     */
   def etlFhir(spark: SparkSession, feedDir: String, identDir: String,
       samplesDir: String, outDir: String, dryRun: Boolean): Unit = {
-    val feed = readFeed(spark, feedDir)
+    val feed = Receiving.openSnapshot(spark, feedDir, Receiving.schema)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no feed at $feedDir"))
     val pending = Receiving.unprocessed(feed, FhirEtl.EtlName, FhirEtl.Revision)
     val idents = readOrEmpty(spark, identDir, IdentifierSchema)
     val samples = readOrEmpty(spark, samplesDir, SampleKeySchema)
@@ -214,28 +215,10 @@ object Cli {
   private val SampleKeySchema = StructType(
     Seq("identifier", "collection_identifier").map(StructField(_, StringType)))
 
-  private def readFeed(spark: SparkSession, dir: String): DataFrame =
-    readFeedIfAny(spark, dir).getOrElse(
-      throw new java.io.FileNotFoundException(s"no feed at $dir"))
-
   /** The table at `dir`, or an empty one for `-`. */
   private def readOrEmpty(spark: SparkSession, dir: String,
       schema: StructType): DataFrame =
     if (dir == "-") spark.createDataFrame(
       java.util.List.of[org.apache.spark.sql.Row](), schema)
     else spark.read.schema(schema).parquet(dir)
-
-  /** The feed at `dir`, if there is one. A swap that crashed between
-    * its two renames is rolled back first ([[Receiving.recoverSwap]]):
-    * the feed then sits in a `.bak-*` sibling, and reading past it
-    * would renumber ids from 0 and swap the backup away.
-    */
-  private def readFeedIfAny(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    Receiving.recoverSwap(fs, dir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
-      Some(spark.read.schema(Receiving.schema).parquet(dir))
-    else None
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Merge, Receiving}
+import graft.operators.{Merge, OrderedPrefix, Receiving}
 
 /** The incremental ETL framework (SURVEY.md §2.7-2.8) — the reference's
   * per-feed verb set (id3c lib/id3c/cli/command/etl/__init__.py) as one
@@ -336,35 +336,17 @@ object Etl {
     * and chunked into `batchSize` api requests. Returns the input tagged
     * with (batch, batch_pos), the exact drain order.
     *
-    * The global FIFO rank is distributed, not a single-partition window
-    * (same coarse-bucket prefix-sum as TextAnalysis.packChunks): ids
-    * bucket by `floor(id / bucketSize)`, ranks are local per bucket, and
-    * only the per-bucket counts (thousands of rows at any scale) pass
-    * through the tiny single-partition cumsum before broadcasting back.
+    * The global FIFO rank is an [[OrderedPrefix.sums]] over id buckets,
+    * not a single-partition window.
     */
   def fetchBatches(
-      loaded: DataFrame, idCol: String, batchSize: Int = 5000,
-      bucketSize: Long = 1L << 13): DataFrame = {
+      loaded: DataFrame, idCol: String, batchSize: Int = 5000): DataFrame = {
     require(batchSize > 0, s"batchSize $batchSize must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val bucket = floor(col(idCol) / bucketSize).as("_bucket")
-    val local = loaded.withColumn("_bucket", bucket)
-      .withColumn("_local_rk", row_number().over(
-        Window.partitionBy("_bucket").orderBy(idCol)))
-    // constant-valued non-foldable key: states the one-partition plan for
-    // the bucket-count cumsum on purpose (see packChunks)
-    val one = floor(col("_bucket") / lit(Long.MaxValue))
-    val offsets = local.groupBy("_bucket").agg(count(lit(1)).as("_n"))
-      .withColumn("_offset", coalesce(sum(col("_n")).over(
-        Window.partitionBy(one).orderBy("_bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_bucket", "_offset")
-    local.join(broadcast(offsets), Seq("_bucket"))
-      .withColumn("_rk", col("_offset") + col("_local_rk"))
-      .withColumn("batch", (floor((col("_rk") - 1) / batchSize) + 1).cast("int"))
-      .withColumn("batch_pos",
-        (col("_rk") - (col("batch") - 1).cast("long") * batchSize).cast("int"))
-      .drop("_bucket", "_local_rk", "_rk", "_offset")
+    OrderedPrefix.sums(loaded, OrderedPrefix.idBucket(col(idCol)),
+        Seq(col(idCol)), Seq("_rk" -> lit(1L)))
+      .withColumn("batch", (floor(col("_rk") / batchSize) + 1).cast("int"))
+      .withColumn("batch_pos", (col("_rk") % batchSize + 1).cast("int"))
+      .drop("_rk", "_rk_total")
   }
 
   /** The redcap_det ETL pipeline composed end-to-end (reference

@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scalar function surface of the engine (SURVEY.md §2.6), re-expressed as
   * pure `Column` combinators so every call stays inside Catalyst codegen.
   * The JVM escape hatches are native expressions such as
-  * [[HammingDistance]], registered for SQL by [[registerAll]].
+  * [[HammingDistance]], registered for SQL by
+  * [[graft.plans.GraftExtensions.registerAll]].
   */
 package object functions {
-
-  /** Register the custom expressions for `spark.sql(...)` use. Idempotent. */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "hamming_distance", exprs => HammingDistance(exprs(0), exprs(1)), "builtin")
-    reg.createOrReplaceTempFunction(
-      "hamming_distance_lte",
-      exprs => HammingDistanceLte(exprs(0), exprs(1), exprs(2)), "builtin")
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs(0)), "builtin")
-  }
 
   import org.apache.spark.sql.GraftSqlBridge.{column => toCol, expression => toExpr}
 

@@ -407,10 +407,8 @@ object Barcodes {
     *
     * Scale shape: the only non-embarrassing step is the dense ordinal.
     * A global `row_number` would funnel the corpus through one task, so
-    * ordinals are computed like [[TextAnalysis.packChunks]]'s prefix sum:
-    * rank within a value-range bucket of `orderCol` (narrow window per
-    * bucket), then a tiny single-partition cumsum over bucket counts is
-    * broadcast back as offsets. The per-barcode explode is `copies + 1`
+    * the ordinal is an [[OrderedPrefix.sums]] rank over value-range
+    * buckets of `orderCol`. The per-barcode explode is `copies + 1`
     * wide at most — no shuffle after the ordinal join.
     *
     * Output: seq, barcode (null on blanks), copy_idx (null on blanks),
@@ -421,26 +419,13 @@ object Barcodes {
       barcodeCol: String, orderCol: String,
       copies: Int, blankEvery: Int,
       across: Int, down: Int,
-      barcodeType: String, referenceText: String,
-      bucketSize: Long = 1L << 13): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      barcodeType: String, referenceText: String): DataFrame = {
     require(copies > 0 && across > 0 && down > 0 && blankEvery >= 0)
-    val bucket = floor(col(orderCol) / bucketSize).as("_bucket")
-    val local = codes.select(col(barcodeCol).as("_code"), col(orderCol), bucket)
-      .withColumn("_local_rank",
-        row_number().over(Window.partitionBy("_bucket").orderBy(orderCol)))
-    // bucket-count cumsum: numBuckets rows, one partition on purpose (the
-    // constant-valued non-foldable key documents that, as in packChunks)
-    val one = floor(col("_bucket") / lit(Long.MaxValue))
-    val offsets = local.groupBy("_bucket")
-      .agg(count(lit(1)).as("_bucket_n"))
-      .withColumn("_offset", coalesce(sum(col("_bucket_n")).over(
-        Window.partitionBy(one).orderBy("_bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_bucket", "_offset")
     val perPage = across.toLong * down
-    val ordinal = local.join(broadcast(offsets), Seq("_bucket"))
-      .withColumn("_m", col("_offset") + col("_local_rank") - 1)
+    val ordinal = OrderedPrefix.sums(
+        codes.select(col(barcodeCol).as("_code"), col(orderCol)),
+        OrderedPrefix.idBucket(col(orderCol)), Seq(col(orderCol)),
+        Seq("_m" -> lit(1L)))
       .withColumn("_blanks",
         if (blankEvery > 0)
           when(col("_m") > 0 && col("_m") % blankEvery === 0, 1).otherwise(0)

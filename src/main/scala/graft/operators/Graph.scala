@@ -93,15 +93,13 @@ object Graph {
     * Output: one row per triangle as id-sorted (a, b, c), a < b < c.
     */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canon = edges
-      .select(col(srcCol).as("x"), col(dstCol).as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("x"),
-        greatest(col("x"), col("y")).as("y"))
-      .distinct()
-    val deg = canon.select(col("x").as("id"))
-      .unionByName(canon.select(col("y").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    // lazy checkpoint: read by the orientation and both degree sides
+    val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(false)
+    trianglesOf(canon, degrees(canon))
+  }
+
+  /** [[triangles]] of a canonical edge frame with its degrees. */
+  private def trianglesOf(canon: DataFrame, deg: DataFrame): DataFrame = {
     // orient by (deg, id): src = smaller endpoint under that order
     val oriented = canon
       .join(deg.select(col("id").as("x"), col("deg").as("dx")), Seq("x"))
@@ -140,16 +138,10 @@ object Graph {
     */
   def clusteringProfile(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canon = edges
-      .select(col(srcCol).as("x"), col(dstCol).as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("x"),
-        greatest(col("x"), col("y")).as("y"))
-      .distinct()
-    val deg = canon.select(col("x").as("id"))
-      .unionByName(canon.select(col("y").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-    val tri = triangles(canon, "x", "y")
+    // lazy checkpoint: read by the orientation and both degree sides
+    val canon = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(false)
+    val deg = degrees(canon)
+    val tri = trianglesOf(canon, deg)
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
     deg.join(tri, Seq("id"), "left")
@@ -171,23 +163,15 @@ object Graph {
     * O(log n) for power-law web graphs.
     *
     * Output: (id, deg) of the surviving k-core subgraph — empty when no
-    * k-core exists.
+    * k-core exists. Throws `IllegalStateException` when the drop set is
+    * still non-empty after `maxRounds` rounds: the edge set is then only
+    * partly peeled, and its degrees are not the k-core.
     */
   def kCore(
       edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"k $k must be >= 1")
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("x").as("id"))
-        .unionByName(e.select(col("y").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-    var e = edges
-      .select(col(srcCol).as("x"), col(dstCol).as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("x"),
-        greatest(col("x"), col("y")).as("y"))
-      .distinct()
-      .localCheckpoint()
+    var e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
     var round = 0
     var stable = false
     while (!stable && round < maxRounds) {
@@ -205,8 +189,29 @@ object Graph {
         .localCheckpoint()
       round += 1
     }
+    if (!stable) throw new IllegalStateException(
+      s"kCore did not converge in $maxRounds rounds — raise maxRounds")
     degrees(e)
   }
+
+  /** The undirected simple-edge frame (x, y), x < y: null endpoints and
+    * self-loops dropped, each edge once. Every caller reads it several
+    * times, so each checkpoints it: without that the input edge plan
+    * runs once per read. */
+  private def canonicalEdges(
+      edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).as("x"), col(dstCol).as("y"))
+      .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
+      .select(least(col("x"), col("y")).as("x"),
+        greatest(col("x"), col("y")).as("y"))
+      .distinct()
+
+  /** (id, deg) of a canonical edge frame. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("x").as("id"))
+      .unionByName(e.select(col("y").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
 
   /** k-hop reachability by frontier BFS — the crawl-depth / link-distance
     * labeling a corpus-curation pipeline uses to bound expansion from a

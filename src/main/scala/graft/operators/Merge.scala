@@ -72,8 +72,8 @@ object Merge {
     * monotonically_increasing_id values (which are unstable across
     * runs and non-dense).
     *
-    * Shape (r10): the [[graft.operators.TextAnalysis.packChunks]]
-    * two-level prefix sum, fully columnar. A range-partitioned
+    * Shape (r10): a two-level prefix sum like [[OrderedPrefix.sums]],
+    * over partitions instead of buckets, fully columnar. A range-partitioned
     * within-partition sort imposes the global order (range partition i
     * holds keys ≤ partition i+1's — no global single-task window, the
     * round-1 anti-pattern); monotonically_increasing_id then encodes

@@ -93,9 +93,8 @@ object Profile {
     * of silently splitting).
     *
     * Distributed shape: compact to (value, count) first, then the
-    * cumulative-rows-before-each-value is the engine's bucketed ordered
-    * prefix sum (coarse bucket = value bit length, local cumsums in
-    * parallel, ≤64 bucket totals through the tiny window). The bucket
+    * cumulative-rows-before-each-value is [[OrderedPrefix.sums]] (coarse
+    * bucket = value bit length, split 1024 ways). The bucket
     * id is pure integer arithmetic — cumBefore·k div N — so boundaries
     * are engine-exact; no sampled range partitioning, no global sort.
     */
@@ -119,31 +118,19 @@ object Profile {
     * window task; still ≤ ~64k bucket ids, monotone in _v.
     */
   private def bucketByRank(c: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // lazy checkpoint: the coarse-bucket id is consumed by BOTH windows
-    // (per-bucket local cumsum, per-bucket offsets) whose partition keys
-    // differ — no exchange reuse, so without it the value compaction +
-    // conv-based bit-length run twice
+    // lazy checkpoint: the coarse-bucket id is consumed by BOTH the
+    // per-bucket local cumsum and the per-bucket totals, whose plans
+    // share no exchange — without it the value compaction + conv-based
+    // bit-length run twice
     val withB = c
       .withColumn("_bits", length(conv(col("_v"), 10, 2)).cast("long"))
       .withColumn("_b", expr(
         "shiftleft(_bits, 10) + shiftright(_v, cast(greatest(_bits - 10, 0) as int))"))
       .drop("_bits")
       .localCheckpoint(false)
-    val inPrev = Window.partitionBy("_b").orderBy("_v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = withB.withColumn("_cin",
-      coalesce(sum(col("_n")).over(inPrev), lit(0L)))
-    val one = floor(col("_b").cast("long") / lit(Long.MaxValue))
-    val offPrev = Window.partitionBy(one).orderBy("_b")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = withB.groupBy("_b").agg(sum(col("_n")).as("_sb"))
-      .withColumn("_off", coalesce(sum(col("_sb")).over(offPrev), lit(0L)))
-      .withColumn("_T", sum(col("_sb")).over(Window.partitionBy(one)))
-      .select("_b", "_off", "_T")
-    local.join(broadcast(offs), Seq("_b"))
-      .withColumn("bucket", expr(s"(_cin + _off) * $k div _T"))
-      .drop("_b", "_cin", "_off", "_T")
+    OrderedPrefix.sums(withB, col("_b"), Seq(col("_v")), Seq("_cin" -> col("_n")))
+      .withColumn("bucket", expr(s"_cin * $k div _cin_total"))
+      .drop("_b", "_cin", "_cin_total")
   }
 
   /** The (value → equi-depth bucket) mapping itself — join it back to

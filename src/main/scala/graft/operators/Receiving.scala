@@ -51,13 +51,6 @@ object Receiving {
       .select("id", "document", "received", "processing_log")
   }
 
-  /** Read an NDJSON feed file as raw documents (reference
-    * cli/command/receiving.py:27-59 keeps the exact text around — so do
-    * we: `document` stays the raw line, parsed on read with from_json).
-    */
-  def readNdjson(spark: SparkSession, path: String): DataFrame =
-    fromDocuments(spark.read.text(path).withColumnRenamed("value", "document"), "document")
-
   /** F1 — *the* incremental predicate (reference `where not processing_log
     * @> [{"etl": name, "revision": rev}]`, etl/presence_absence.py:72-79):
     * keep records not yet processed by (etl, revision). A higher-order
@@ -215,11 +208,20 @@ object Receiving {
     }
   }
 
-  /** Read a snapshot table, first recovering from any crashed swap. */
-  def openSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    recoverSwap(org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration), dir)
-    spark.read.parquet(dir)
+  /** The snapshot table at `dir` read with `schema` (no footer-inference
+    * job), or None when there is none. A swap that crashed between its
+    * two renames is rolled back first ([[recoverSwap]]): the table then
+    * sits in a `.bak-*` sibling, and reading past it would miss it — a
+    * feed would renumber its ids from 0 and swap the backup away.
+    */
+  def openSnapshot(spark: SparkSession, dir: String,
+      schema: StructType): Option[DataFrame] = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, dir)
+    if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
+      Some(spark.read.schema(schema).parquet(dir))
+    else None
   }
 
   /** Recover from a crashed swap. If `dir` is missing but `.bak-*`

@@ -119,12 +119,9 @@ object Sampling {
     * shuffle — reproducible across runs, engines, and partitionings,
     * unlike `repartition`/`orderBy(rand())`.
     *
-    * The global rank is distributed, not a single-partition window: the
-    * hash's first two hex chars give 256 uniformly-filled buckets, ranks
-    * are local per bucket, and only the 256 bucket counts pass through
-    * the tiny single-partition cumsum before broadcasting back (the same
-    * coarse-bucket prefix-sum as TextAnalysis.packChunks). The corpus is
-    * shuffled once, on the bucket key.
+    * The global rank is an [[OrderedPrefix.sums]] whose buckets are the
+    * hash's first two hex chars — 256 uniformly filled buckets. The
+    * corpus is shuffled once, on the bucket key.
     *
     * Output: input columns + shard (0-based round-robin) + shard_pos
     * (0-based position within the shard).
@@ -133,26 +130,17 @@ object Sampling {
       df: DataFrame, keyCol: String, nShards: Int,
       salt: String = "graft"): DataFrame = {
     require(nShards > 0, s"nShards $nShards must be positive")
-    import org.apache.spark.sql.expressions.Window
     val h = md5(concat_ws("|", col(keyCol).cast("string"), lit(salt)))
-    val local = df.withColumn("_h", h)
-      .withColumn("_bucket", conv(substring(col("_h"), 1, 2), 16, 10).cast("int"))
-      .withColumn("_local_rk", row_number().over(
-        Window.partitionBy("_bucket").orderBy(col("_h"), col(keyCol))))
-    // constant-valued non-foldable key: one partition for the 256-row
-    // bucket-count cumsum, on purpose (see packChunks)
-    val one = floor(col("_bucket") / lit(Int.MaxValue))
-    val offsets = local.groupBy("_bucket").agg(count(lit(1)).as("_n"))
-      .withColumn("_offset", coalesce(sum(col("_n")).over(
-        Window.partitionBy(one).orderBy("_bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_bucket", "_offset")
-    local.join(broadcast(offsets), Seq("_bucket"))
-      .withColumn("_rk", col("_offset") + col("_local_rk") - 1) // 0-based
+    OrderedPrefix.sums(df.withColumn("_h", h), hexByte(col("_h")),
+        Seq(col("_h"), col(keyCol)), Seq("_rk" -> lit(1L)))
       .withColumn("shard", (col("_rk") % nShards).cast("int"))
       .withColumn("shard_pos", floor(col("_rk") / nShards).cast("long"))
-      .drop("_h", "_bucket", "_local_rk", "_rk", "_offset")
+      .drop("_h", "_rk", "_rk_total")
   }
+
+  /** The first byte (two hex chars) of a hex digest, 0..255. */
+  private def hexByte(hex: Column): Column =
+    conv(substring(hex, 1, 2), 16, 10).cast("int")
 
   /** Length-bucketed batch assignment — "dynamic batching" for training
     * efficiency: sequences of similar token length share a batch so
@@ -162,15 +150,14 @@ object Sampling {
     * `tokenCount / bucketWidth`, get a deterministic hash-order ordinal
     * WITHIN their bucket, and pack into batches of `batchSize`.
     *
-    * The per-bucket ordinal is the same two-level distributed rank as
-    * [[shardAssign]]: the hash's first two hex chars split each length
-    * bucket into 256 uniform sub-buckets ranked locally, and only the
-    * per-(bucket, sub) counts ride a tiny cumsum (window over 256 rows
-    * per bucket, partitioned by bucket — never a bucket-sized single
-    * task; a web-scale length bucket holds billions of rows). Because
-    * the sub-bucket is a prefix of the hash, the stitched ordinal equals
-    * a plain per-bucket rank by (hash, id) — which is exactly what the
-    * DuckDB oracle computes.
+    * The per-bucket ordinal is [[OrderedPrefix.sums]] within each length
+    * bucket: the hash's first two hex chars split it into 256 uniform
+    * sub-buckets ranked locally, and only the per-(bucket, sub) counts
+    * ride the offsets window, keyed by length bucket — never a
+    * bucket-sized single task; a web-scale length bucket holds billions
+    * of rows. Because the sub-bucket is a prefix of the hash, the ordinal
+    * equals a plain per-bucket rank by (hash, id) — which is exactly what
+    * the DuckDB oracle computes.
     *
     * Output: id, n_tokens, len_bucket, batch_no, pos_in_batch (the last
     * batch of each bucket may be ragged, as in real loaders).
@@ -181,24 +168,13 @@ object Sampling {
       salt: String = "graft"): DataFrame = {
     require(bucketWidth > 0 && batchSize > 0,
       s"bucketWidth $bucketWidth and batchSize $batchSize must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val h = md5(concat_ws("|", col("id").cast("string"), lit(salt)))
-    val local = df
+    val docs = df
       .select(col(idCol).as("id"),
         TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
       .withColumn("len_bucket", floor(col("n_tokens") / bucketWidth))
-      .withColumn("_h", h)
-      .withColumn("_sub", conv(substring(col("_h"), 1, 2), 16, 10).cast("int"))
-      .withColumn("_local_rk", row_number().over(
-        Window.partitionBy("len_bucket", "_sub").orderBy(col("_h"), col("id"))))
-    val offsets = local.groupBy("len_bucket", "_sub")
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_offset", coalesce(sum(col("_n")).over(
-        Window.partitionBy("len_bucket").orderBy("_sub")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("len_bucket", "_sub", "_offset")
-    local.join(broadcast(offsets), Seq("len_bucket", "_sub"))
-      .withColumn("_rk", col("_offset") + col("_local_rk") - 1) // 0-based
+      .withColumn("_h", md5(concat_ws("|", col("id").cast("string"), lit(salt))))
+    OrderedPrefix.sums(docs, hexByte(col("_h")), Seq(col("_h"), col("id")),
+        Seq("_rk" -> lit(1L)), within = Seq("len_bucket"))
       .select(col("id").as(idCol), col("n_tokens"), col("len_bucket"),
         floor(col("_rk") / batchSize).as("batch_no"),
         (col("_rk") % batchSize).as("pos_in_batch"))
@@ -327,9 +303,8 @@ object Sampling {
     * Everything is md5-derived, so resamples are reproducible and
     * engine-portable; changing `salt` redraws the negatives.
     *
-    * Scale shape: dense indices come from the bucketed prefix sum (per-
-    * bucket windows + a broadcast bucket-offset frame — no global
-    * row_number); N is one broadcast scalar; the only corpus-sized
+    * Scale shape: dense indices and N come from [[OrderedPrefix.sums]]
+    * over id buckets (no global row_number); the only corpus-sized
     * shuffle is the final equi-join of (anchor, target-index) against
     * the index frame, which is exactly the join any gather-by-index
     * pays. No RNG state, no driver involvement.
@@ -338,29 +313,16 @@ object Sampling {
     */
   def negativePairs(
       df: DataFrame, idCol: String, k: Int,
-      salt: String = "graft", bucketSize: Long = 1L << 13): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      salt: String = "graft"): DataFrame = {
     require(k > 0)
-    val bucket = floor(col(idCol) / bucketSize).as("_bucket")
-    val local = df.select(col(idCol), bucket)
-      .withColumn("_lr",
-        row_number().over(Window.partitionBy("_bucket").orderBy(idCol)))
-    val one = floor(col("_bucket") / lit(Long.MaxValue))
-    val offsets = local.groupBy("_bucket")
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_off", coalesce(sum(col("_n")).over(
-        Window.partitionBy(one).orderBy("_bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_bucket", "_off")
-    val idx = local.join(broadcast(offsets), Seq("_bucket"))
-      .select(col(idCol), (col("_off") + col("_lr") - 1).as("_i"))
-    val total = df.agg(count(lit(1)).as("_N"))
+    val idx = OrderedPrefix.sums(df.select(col(idCol)),
+        OrderedPrefix.idBucket(col(idCol)), Seq(col(idCol)),
+        Seq("_i" -> lit(1L)))
     val raw = keyHash60(
       concat(col(idCol).cast("string"), lit(":"), col("j").cast("string")),
-      salt) % (col("_N") - 1)
+      salt) % (col("_i_total") - 1)
     val targets = idx
-      .crossJoin(broadcast(total))
-      .select(col(idCol), col("_i"), col("_N"),
+      .select(col(idCol), col("_i"), col("_i_total"),
         explode(sequence(lit(0), lit(k - 1))).as("j"))
       .withColumn("_t",
         when(raw >= col("_i"), raw + 1).otherwise(raw))
@@ -484,12 +446,12 @@ object Sampling {
     * sources, unlike floor- or round-based mixing).
     *
     * All arithmetic is decimal(38,0)-exact (total·w overflows a long
-    * once w is corpus-scale). The deficit ranking is distributed: the
-    * remainder's top byte (monotone double coarsening — rounding may
-    * collapse neighbors but never reorders) buckets groups 256 ways,
-    * ranks are local per bucket ordered by the EXACT (remainder desc,
-    * group) key, and only the 256 bucket counts ride the tiny cumsum —
-    * one row per group never funnels through a single-partition window
+    * once w is corpus-scale). The deficit ranking is an
+    * [[OrderedPrefix.sums]]: the remainder's top byte (monotone double
+    * coarsening — rounding may collapse neighbors but never reorders)
+    * buckets groups 256 ways, reversed for the descending order, and
+    * ranks within a bucket follow the EXACT (remainder desc, group) key
+    * — one row per group never funnels through a single-partition window
     * even with millions of groups (domains, not sources).
     *
     * Output: group, w (summed weight), quota; sum(quota) == total —
@@ -500,7 +462,6 @@ object Sampling {
       df: DataFrame, groupCol: String, weightCol: String,
       total: Long): DataFrame = {
     require(total >= 0, s"total $total must be non-negative")
-    import org.apache.spark.sql.expressions.Window
     val g = df.groupBy(col(groupCol).as("group"))
       .agg(sum(col(weightCol)).cast("decimal(38,0)").as("w"))
     val tot = g.agg(sum(col("w")).as("_W"))
@@ -523,27 +484,14 @@ object Sampling {
         ((col("_tw") - col("_rem")) / wSafe).cast("decimal(38,0)"))
     val deficit = q.agg((lit(total) - sum(col("_fq")))
       .cast("long").as("_D"))
-    val bucketed = q
-      .withColumn("_bucket", least(lit(255), greatest(lit(0),
-        floor(col("_rem").cast("double") * 256d /
-          wSafe.cast("double")).cast("int"))))
-      .withColumn("_local_rk", row_number().over(
-        Window.partitionBy("_bucket")
-          .orderBy(col("_rem").desc, col("group"))))
-    // constant-valued non-foldable key: one partition for the 256-row
-    // bucket-count cumsum, on purpose (see shardAssign)
-    val one = floor(col("_bucket") / lit(Int.MaxValue))
-    val offsets = bucketed.groupBy("_bucket").agg(count(lit(1)).as("_n"))
-      .withColumn("_offset", coalesce(sum(col("_n")).over(
-        Window.partitionBy(one).orderBy(col("_bucket").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_bucket", "_offset")
-    bucketed.join(broadcast(offsets), Seq("_bucket"))
+    val topByte = least(lit(255), greatest(lit(0),
+      floor(col("_rem").cast("double") * 256d / wSafe.cast("double")).cast("int")))
+    OrderedPrefix.sums(q, lit(255) - topByte,
+        Seq(col("_rem").desc, col("group")), Seq("_rk" -> lit(1L)))
       .crossJoin(broadcast(deficit))
-      .withColumn("_rk", col("_offset") + col("_local_rk"))
       .select(col("group"), col("w").cast("long").as("w"),
         when(col("_W") === 0, 0L)
           .otherwise(col("_fq").cast("long") +
-            when(col("_rk") <= col("_D"), 1L).otherwise(0L)).as("quota"))
+            when(col("_rk") < col("_D"), 1L).otherwise(0L)).as("quota"))
   }
 }

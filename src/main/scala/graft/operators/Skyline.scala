@@ -19,10 +19,10 @@ object Skyline {
     * (1) reduce to one (x, ymax) point per distinct x (rows below their
     * x's ymax are dominated by that point); (2) the surviving test is
     * "ymax(x) > max ymax over all x' > x", an ORDERED running max — run
-    * it with the same two-shuffle bucketed form as the engine's prefix
-    * sums (coarse bucket = x's bit length, within-bucket cummax in
-    * parallel, the ≤64 bucket maxima through a tiny single-partition
-    * window, broadcast back); (3) equi-join the surviving (x, ymax)
+    * it with the same two-shuffle bucketed form as
+    * [[OrderedPrefix.sums]] (coarse bucket = x's bit length,
+    * within-bucket cummax in parallel, the ≤64 bucket maxima through a
+    * tiny single-partition window, broadcast back); (3) equi-join the surviving (x, ymax)
     * points back to the rows. Equal points never strictly dominate each
     * other, so exact duplicates of a frontier point all survive — same
     * answer as the quadratic NOT EXISTS definition, in two narrow
@@ -35,7 +35,7 @@ object Skyline {
       .rowsBetween(Window.unboundedPreceding, -1)
     val local = withB.withColumn("_mIn", max(col("_ymax")).over(inPrev))
     // ≤64 bucket maxima: constant-valued non-foldable partition key, the
-    // deliberate tiny-window form shared with packChunks
+    // deliberate tiny-window form of OrderedPrefix.sums
     val one = floor(col("_b").cast("long") / lit(Long.MaxValue))
     val offPrev = Window.partitionBy(one).orderBy(col("_b").desc)
       .rowsBetween(Window.unboundedPreceding, -1)

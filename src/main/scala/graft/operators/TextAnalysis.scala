@@ -243,55 +243,28 @@ object TextAnalysis {
     * [chunk_first, chunk_last] range it lands in (a doc can straddle a
     * boundary — the standard pretraining packer splits it).
     *
-    * The global prefix sum is distributed, not a single-partition window:
-    * ids are bucketed coarsely (`floor(id / bucketSize)`), each bucket
-    * runs a local windowed cumsum in parallel, and only the per-bucket
-    * totals (numBuckets rows — thousands, not billions, at any corpus
-    * size) pass through a tiny single-partition cumsum before being
-    * broadcast back as offsets. At 100 TB this is two narrow shuffles of
-    * the (id, n_tokens) projection; the text itself never moves.
+    * The global token offset is [[OrderedPrefix.sums]] over id buckets:
+    * only the (id, n_tokens) projection shuffles; the text never moves.
     */
   def packChunks(
-      df: DataFrame, idCol: String, tokenCol: String,
-      budget: Int, bucketSize: Long = 1L << 13): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucket = floor(col(idCol) / bucketSize).as("_bucket")
-    val local = df.select(col(idCol), col(tokenCol), bucket)
-      .withColumn("_local_cum", sum(col(tokenCol)).over(
-        Window.partitionBy("_bucket").orderBy(idCol)))
-    // The bucket-totals cumsum runs over numBuckets rows (thousands at any
-    // corpus size) — one partition is the right plan. The constant-valued
-    // (but non-foldable, so Catalyst keeps it) partition key states that
-    // on purpose instead of tripping WindowExec's "No Partition Defined"
-    // scale warning for a frame that cannot be large.
-    val one = floor(col("_bucket") / lit(Long.MaxValue))
-    val offsets = local.groupBy("_bucket")
-      .agg(sum(col(tokenCol)).as("_bucket_total"))
-      .withColumn("_offset", coalesce(sum(col("_bucket_total")).over(
-        Window.partitionBy(one).orderBy("_bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_bucket", "_offset")
-    local.join(broadcast(offsets), Seq("_bucket"))
-      .withColumn("_end", col("_local_cum") + col("_offset"))
-      .select(col(idCol), col(tokenCol),
-        (col("_end") - col(tokenCol)).as("start_offset"),
-        when(col(tokenCol) > 0, floor((col("_end") - col(tokenCol)) / budget))
+      df: DataFrame, idCol: String, tokenCol: String, budget: Int): DataFrame =
+    OrderedPrefix.sums(df.select(col(idCol), col(tokenCol)),
+        OrderedPrefix.idBucket(col(idCol)), Seq(col(idCol)),
+        Seq("start_offset" -> col(tokenCol)))
+      .select(col(idCol), col(tokenCol), col("start_offset"),
+        when(col(tokenCol) > 0, floor(col("start_offset") / budget))
           .as("chunk_first"),
-        when(col(tokenCol) > 0, floor((col("_end") - 1) / budget))
+        when(col(tokenCol) > 0,
+          floor((col("start_offset") + col(tokenCol) - 1) / budget))
           .as("chunk_last"))
-  }
 
   /** Vocabulary coverage curve — the tokenizer-sizing question "how many
     * vocabulary entries cover X% of all token occurrences?" answered for
-    * several X at once. The frequency-descending global rank is a
-    * DISTRIBUTED ordered prefix sum (same two-shuffle shape as
-    * [[packChunks]]): the coarse ordered bucket is the count's BIT
-    * LENGTH (every token in a higher bucket outranks every token in a
-    * lower one — integer-exact, no log2 float boundaries), each bucket
-    * ranks and cumsums locally in parallel under (cnt desc, tok), and
-    * only the ≤64 bucket totals pass through the tiny single-partition
-    * cumsum before broadcasting back. No vocabulary-sized global sort,
-    * no single-partition window over the vocab.
+    * several X at once. The frequency-descending global rank is an
+    * [[OrderedPrefix.sums]] whose coarse ordered bucket is the count's BIT
+    * LENGTH, reversed (every token in a higher bucket outranks every
+    * token in a lower one — integer-exact, no log2 float boundaries):
+    * ≤64 bucket totals, no vocabulary-sized global sort.
     *
     * Output per threshold (basis points): (bp, vocab_size = smallest
     * prefix of the frequency-ranked vocab reaching the threshold,
@@ -299,32 +272,16 @@ object TextAnalysis {
     */
   def vocabCoverageCurve(
       df: DataFrame, textCol: String, thresholdsBp: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(thresholdsBp.nonEmpty &&
       thresholdsBp.forall(b => b > 0 && b <= 10000),
       "thresholds are basis points in (0, 10000]")
     val counts = df.select(explode(tokens(col(textCol))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val withB = counts.withColumn("_b", length(conv(col("cnt"), 10, 2)))
-    val wIn = Window.partitionBy("_b").orderBy(col("cnt").desc, col("tok"))
-    val local = withB
-      .withColumn("_r", row_number().over(wIn))
-      .withColumn("_c", sum(col("cnt")).over(
-        wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // ≤64 bucket rows: constant-valued non-foldable partition key, same
-    // deliberate tiny-cumsum form as packChunks
-    val one = floor(col("_b").cast("long") / lit(Long.MaxValue))
-    val prev = Window.partitionBy(one).orderBy(col("_b").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = withB.groupBy("_b")
-      .agg(count(lit(1)).as("_nb"), sum(col("cnt")).as("_sb"))
-      .withColumn("_offR", coalesce(sum(col("_nb")).over(prev), lit(0L)))
-      .withColumn("_offC", coalesce(sum(col("_sb")).over(prev), lit(0L)))
-      .withColumn("_T", sum(col("_sb")).over(Window.partitionBy(one)))
-      .select("_b", "_offR", "_offC", "_T")
-    local.join(broadcast(offs), Seq("_b"))
-      .select((col("_offR") + col("_r")).as("rank"),
-        (col("_offC") + col("_c")).as("cum"), col("_T"))
+    OrderedPrefix.sums(counts, lit(64) - length(conv(col("cnt"), 10, 2)),
+        Seq(col("cnt").desc, col("tok")),
+        Seq("_r" -> lit(1L), "_c" -> col("cnt")))
+      .select((col("_r") + 1).as("rank"), (col("_c") + col("cnt")).as("cum"),
+        col("_c_total").as("_T"))
       .withColumn("bp", explode(array(thresholdsBp.map(b => lit(b)): _*)))
       .filter(col("cum") * 10000 >= col("_T") * col("bp"))
       .groupBy("bp")

@@ -155,6 +155,7 @@ class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("snapshotSwap recovers a swap that crashed between its two renames") {
     import spark.implicits._
+    val schema = Seq((0L, "")).toDF("id", "v").schema
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val base = Files.createTempDirectory("graft_swap").toString
@@ -168,27 +169,29 @@ class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir)))
     // open recovers: the old snapshot is rolled back into place (the
     // crashed transaction aborts), stranded staging dirs are swept
-    val recovered = Receiving.openSnapshot(spark, dir)
+    val recovered = Receiving.openSnapshot(spark, dir, schema).get
     assert(recovered.collect().map(_.getString(1)).toSeq == Seq("a"))
     assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir.tmp-*")).isEmpty)
     assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir.bak-*")).isEmpty)
     // and the next swap proceeds normally after recovery
     Receiving.snapshotSwap(Seq((3L, "c")).toDF("id", "v"), dir)
-    assert(Receiving.openSnapshot(spark, dir).collect()
+    assert(Receiving.openSnapshot(spark, dir, schema).get.collect()
       .map(_.getString(1)).toSeq == Seq("c"))
   }
 
   test("openSnapshot sweeps a staging dir left by a swap that died writing") {
     import spark.implicits._
+    val schema = Seq((0L, "")).toDF("id", "v").schema
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val dir = Files.createTempDirectory("graft_swap").toString + "/table"
     Receiving.snapshotSwap(Seq((1L, "a")).toDF("id", "v"), dir)
     // the crash came before the first rename: dir is live, no backup
     Seq((2L, "b")).toDF("id", "v").write.parquet(s"$dir.tmp-999")
-    assert(Receiving.openSnapshot(spark, dir).collect()
+    assert(Receiving.openSnapshot(spark, dir, schema).get.collect()
       .map(_.getString(1)).toSeq == Seq("a"))
     assert(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir.tmp-*")).isEmpty)
+    assert(Receiving.openSnapshot(spark, s"$dir-missing", schema).isEmpty)
   }
 
   test("recoverSwap throws and deletes no backup when its roll-back rename fails") {
@@ -252,16 +255,16 @@ class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("Etl.fetchBatches chunks FIFO by id across bucket boundaries") {
     import spark.implicits._
-    // 10 records, batchSize 4 → 2.5 batches; bucketSize 4 forces the rank
-    // to cross coarse-bucket offsets (ids 0-3 | 4-7 | 8-9)
-    val loaded = (0L until 10L).map(i => (i, s"rec-$i")).toDF("id", "record")
-    val got = Etl.fetchBatches(loaded.repartition(5), "id",
-        batchSize = 4, bucketSize = 4L)
+    // 10 records, batchSize 4 → 2.5 batches; ids 5000 apart spread the
+    // rank over six 8192-wide coarse buckets, crossing their offsets
+    val loaded = (0L until 10L).map(i => (i * 5000, s"rec-$i"))
+      .toDF("id", "record")
+    val got = Etl.fetchBatches(loaded.repartition(5), "id", batchSize = 4)
       .collect().map(r => (r.getLong(0),
         r.getAs[Int]("batch"), r.getAs[Int]("batch_pos")))
       .sortBy(_._1)
     val expected = (0L until 10L).map { i =>
-      (i, (i / 4 + 1).toInt, (i % 4 + 1).toInt)
+      (i * 5000, (i / 4 + 1).toInt, (i % 4 + 1).toInt)
     }
     assert(got.toSeq == expected)
   }

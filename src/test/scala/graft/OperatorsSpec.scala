@@ -192,21 +192,21 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("TextAnalysis.packChunks: straddling docs, empty docs, bucket boundaries") {
     import spark.implicits._
     // budget 10; doc 3 (7 tokens) straddles chunk 0→1; doc 4 empty;
-    // bucketSize 2 forces multi-bucket offsets (ids 1,2 | 3,4 | 5)
+    // ids 5000 apart span four 8192-wide buckets (5000 | 10000,15000 |
+    // 20000 | 25000), so the offsets cross bucket boundaries
     val df = Seq((1L, 4L), (2L, 5L), (3L, 7L), (4L, 0L), (5L, 10L))
-      .toDF("doc_id", "n_tokens")
-    val r = TextAnalysis.packChunks(df, "doc_id", "n_tokens",
-        budget = 10, bucketSize = 2)
+      .map { case (i, n) => (i * 5000, n) }.toDF("doc_id", "n_tokens")
+    val r = TextAnalysis.packChunks(df, "doc_id", "n_tokens", budget = 10)
       .orderBy("doc_id").collect()
       .map(x => (x.getLong(0), x.getLong(2),
         Option(x.get(3)).map(_.toString.toLong),
         Option(x.get(4)).map(_.toString.toLong)))
     assert(r.toSeq == Seq(
-      (1L, 0L, Some(0L), Some(0L)), // tokens 0-3
-      (2L, 4L, Some(0L), Some(0L)), // tokens 4-8
-      (3L, 9L, Some(0L), Some(1L)), // tokens 9-15: straddles
-      (4L, 16L, None, None), // empty doc occupies no chunk
-      (5L, 16L, Some(1L), Some(2L)))) // tokens 16-25
+      (5000L, 0L, Some(0L), Some(0L)), // tokens 0-3
+      (10000L, 4L, Some(0L), Some(0L)), // tokens 4-8
+      (15000L, 9L, Some(0L), Some(1L)), // tokens 9-15: straddles
+      (20000L, 16L, None, None), // empty doc occupies no chunk
+      (25000L, 16L, Some(1L), Some(2L)))) // tokens 16-25
   }
 
   test("TextAnalysis.tokenCount: empty, blank, normal") {
@@ -409,11 +409,11 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // grid: seq 5 → row 1, col 1 on a 4-wide sheet
     val r5 = rows.find(_._1 == 5L).get
     assert(r5._4 == 1L && r5._5 == 1L)
-    // bucket-boundary ordinals: force multiple buckets and a straddle
-    val many = (0L until 40L).map(i => (f"C$i%03d", i)).toDF("code", "ord")
+    // bucket-boundary ordinals: ords 5000 apart span 24 buckets
+    val many = (0L until 40L).map(i => (f"C$i%03d", i * 5000))
+      .toDF("code", "ord")
     val seqs = Barcodes.labelLayout(many, "code", "ord",
-        copies = 2, blankEvery = 3, across = 7, down = 15, "S", "r",
-        bucketSize = 16L)
+        copies = 2, blankEvery = 3, across = 7, down = 15, "S", "r")
       .collect().map(_.getLong(0)).sorted
     // 40 barcodes × 2 copies + floor(39/3)=13 blanks = 93 labels, dense
     assert(seqs.length == 93 && seqs.head == 0L && seqs.last == 92L

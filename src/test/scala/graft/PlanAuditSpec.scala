@@ -106,7 +106,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("BroadcastNestedLoopJoin"), "fetch join degenerated")
     // the FIFO rank must be the coarse-bucket form: a window partitioned
     // by the bucket key, never a corpus-wide single-partition row_number
-    assert(p.contains("_bucket"), p.take(4000))
+    assert("windowspecdefinition\\(_b#".r.findFirstIn(p).isDefined, p.take(4000))
   }
 
   test("q89 bigram LM: equi joins only, map-side partial counts") {
@@ -118,9 +118,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q90 shard assign: rank is bucket-partitioned, not one global window") {
     val p = plan("q90_shard_assign")
-    // the corpus-side row_number must partition by the hash bucket; the
+    // the corpus-side rank window must partition by the hash bucket; the
     // only unpartitioned-looking window is the 256-row bucket cumsum
-    assert(p.contains("_bucket"), p.take(3000))
+    assert("windowspecdefinition\\(_b#".r.findFirstIn(p).isDefined, p.take(3000))
     assert("Window \\[".r.findAllIn(p).size == 2, p.take(4000))
   }
 
@@ -162,7 +162,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // dense ordinals come from per-bucket windows + a broadcast of the
     // tiny bucket-offset frame — never a global row_number funnel
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
-    assert(p.contains("partial_count"), "bucket counts lost map-side combine")
+    assert(p.contains("partial_sum"), "bucket counts lost map-side combine")
     assert(p.contains("Generate"), "label explode missing")
   }
 
@@ -188,7 +188,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // N is one broadcast row; the gather is an equi-join on the dense
     // index — a real cartesian/NL join here would be quadratic at scale
     assert(!p.contains("CartesianProduct"), "corpus-sized cartesian")
-    assert("windowspecdefinition\\(_bucket".r.findFirstIn(p).isDefined,
+    assert("windowspecdefinition\\(_b#".r.findFirstIn(p).isDefined,
       "ordinal window lost its bucket partitioning")
   }
 
@@ -348,13 +348,15 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q145 length-batch ordinal windows stay sub-bucketed") {
-    // the rank window must partition by (len_bucket, _sub) — a bucket-only
-    // window would funnel a web-scale length class through one task; the
-    // only bucket-level window is the 256-row offset cumsum
+    // the rank window must partition by (len_bucket, hash sub-bucket _b)
+    // — a bucket-only window would funnel a web-scale length class
+    // through one task; the only bucket-level window is the 256-row
+    // offset cumsum
     val p = plan("q145_length_batches")
     val winLines = p.linesIterator
       .filter(_.contains("windowspecdefinition")).toSeq
-    assert(winLines.exists(l => l.contains("_sub") && l.contains("row_number")),
+    assert(winLines.exists(l =>
+      "windowspecdefinition\\(len_bucket#\\d+L?, _b#\\d+L?, ".r.findFirstIn(l).isDefined),
       winLines.mkString("\n"))
     assert(!p.contains("SinglePartition"), p.take(3000))
   }
@@ -553,11 +555,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q153 quota allocation: windows only on bucket keys, never groups") {
     val p = plan("q153_quota_allocation")
     // the deficit rank must be the two-level bucketed form: local rank
-    // partitioned by _bucket, offsets cumsum over <=256 bucket-count rows
+    // partitioned by _b, offsets cumsum over <=256 bucket-count rows
     val winLines = p.linesIterator
       .filter(_.contains("windowspecdefinition")).toSeq
     assert(winLines.nonEmpty, p.take(2000))
-    assert(winLines.forall(_.contains("_bucket")), winLines.mkString("\n"))
+    assert(winLines.forall(_.contains("_b#")), winLines.mkString("\n"))
     assert(!p.contains("CartesianProduct"), p.take(3000))
   }
 

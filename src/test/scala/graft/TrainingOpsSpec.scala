@@ -463,15 +463,15 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("negativePairs: k per anchor, never self, repartition-stable") {
     import spark.implicits._
-    val ids = (0L until 30L).toDF("id")
-    val got = Sampling.negativePairs(ids, "id", k = 3, bucketSize = 8L)
+    // ids 5000 apart: the dense indices span eighteen 8192-wide buckets
+    val ids = (0L until 30L).map(_ * 5000).toDF("id")
+    val got = Sampling.negativePairs(ids, "id", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == 90)
     assert(got.groupBy(_._1).forall(_._2.map(_._2).sorted.toSeq == Seq(0L, 1L, 2L)))
     assert(got.forall(t => t._1 != t._3))
-    assert(got.forall(t => t._3 >= 0L && t._3 < 30L))
-    val again = Sampling.negativePairs(ids.repartition(7), "id", k = 3,
-      bucketSize = 8L)
+    assert(got.forall(t => t._3 >= 0L && t._3 < 30L * 5000 && t._3 % 5000 == 0))
+    val again = Sampling.negativePairs(ids.repartition(7), "id", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(again.sorted.toSeq == got.sorted.toSeq)
   }
@@ -600,6 +600,17 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a tree has no 2-core at all
     val tree = Seq((0L, 1L), (1L, 2L), (2L, 3L), (1L, 4L)).toDF("src", "dst")
     assert(Graph.kCore(tree, "src", "dst", k = 2).isEmpty)
+  }
+
+  test("kCore throws when maxRounds runs out mid-peel") {
+    import spark.implicits._
+    // a 12-node path peels only its two ends per round: six rounds to
+    // empty it, a seventh to see the empty drop set
+    val path = (0L until 11L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException](
+      Graph.kCore(path, "src", "dst", k = 2, maxRounds = 3))
+    assert(e.getMessage.contains("maxRounds"))
+    assert(Graph.kCore(path, "src", "dst", k = 2, maxRounds = 7).isEmpty)
   }
 
   test("triangles match brute-force enumeration on a random graph") {
