@@ -111,8 +111,17 @@ object Cli {
     Receiving.snapshotSwap(merged, feedDir)
   }
 
-  /** The FHIR ETL cycle: unprocessed → decompose → write deltas → mark
-    * processed/skipped → swap the feed snapshot.
+  /** The FHIR ETL cycle: unprocessed → decompose → stage the seven
+    * deltas and the marked feed → swap them in, the feed last.
+    *
+    * All eight outputs go through one [[Receiving.snapshotSwap]] call:
+    * they are written to their staging directories at the same time, and
+    * nothing is renamed into place until every write has succeeded. The
+    * marked feed is swapped in last, so its rename is the cycle's commit
+    * point. A cycle whose write fails swaps nothing in and leaves the feed
+    * unmarked; re-running it re-derives the same deltas. A crash between
+    * two renames can leave some deltas swapped in with the feed still
+    * unmarked; the next cycle then rewrites them from the same documents.
     */
   def etlFhir(spark: SparkSession, feedDir: String, identDir: String,
       samplesDir: String, outDir: String, dryRun: Boolean): Unit = {
@@ -122,20 +131,20 @@ object Cli {
     val idents = readOrEmpty(spark, identDir, IdentifierSchema)
     val samples = readOrEmpty(spark, samplesDir, SampleKeySchema)
     val delta = FhirEtl.decompose(pending, idents, samples)
-    Seq("sites" -> delta.sites, "individuals" -> delta.individuals,
-      "encounters" -> delta.encounters,
+    val deltas = Seq("sites" -> delta.sites,
+      "individuals" -> delta.individuals, "encounters" -> delta.encounters,
       "sample_updates" -> delta.sampleUpdates, "targets" -> delta.targets,
       "presence_absence" -> delta.presenceAbsence,
       "statuses" -> delta.statuses)
-      .foreach { case (name, df) =>
-        Receiving.snapshotSwap(df, s"$outDir/$name", dryRun) }
+      .map { case (name, df) => df -> s"$outDir/$name" }
     // errors are quarantined as skipped, like the reference's mark_skipped
     val statuses = delta.statuses.select(col("id"),
       when(col("status") === "processed", "processed").otherwise("skipped")
         .as("status"))
-    Receiving.snapshotSwap(
-      Receiving.markStatuses(feed, statuses, FhirEtl.EtlName, FhirEtl.Revision),
-      feedDir, dryRun)
+    val marked =
+      Receiving.markStatuses(feed, statuses, FhirEtl.EtlName, FhirEtl.Revision)
+    // the marked feed goes last: its rename commits the cycle
+    Receiving.snapshotSwap(deltas :+ (marked -> feedDir), dryRun)
   }
 
   /** J11 — manifest diff: records of `new` whose provenance-excluded deep

@@ -169,42 +169,90 @@ object Receiving {
   def readUnprocessedPartition(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).filter(!col("processed")).drop("processed")
 
-  /** Atomic snapshot write: write to `<dir>.tmp-<epoch>`, then swap the
-    * directory — the batch analogue of the reference's single-transaction
-    * commit/rollback (cli/command/__init__.py:89-158). A dry run stops
-    * before the swap.
+  /** Atomic snapshot write of one table: the one-output call of the
+    * multi-output swap below. */
+  def snapshotSwap(df: DataFrame, dir: String, dryRun: Boolean = false): Unit =
+    snapshotSwap(Seq(df -> dir), dryRun)
+
+  /** Atomic snapshot writes of several tables, staged together and
+    * swapped in last — the batch analogue of the reference's
+    * single-transaction commit/rollback (cli/command/__init__.py:89-158).
     *
-    * Crash safety (single writer): between `rename(dst→bak)` and
-    * `rename(tmp→dst)` there is an instant with no live directory. Every
-    * entry point ([[openSnapshot]], and snapshotSwap itself before it
-    * starts) runs [[recoverSwap]], which rolls a stranded `.bak-*` back
-    * into place — the rename-back is one atomic metadata op, so a crashed
-    * swap behaves like the reference's rolled-back transaction: the old
-    * snapshot stays live, the orphaned `.tmp-*` is swept. A rename that
-    * reports failure throws an `IOException` naming both paths, before
-    * the backup is deleted.
+    *  1. [[recoverSwap]] runs on every target.
+    *  1. Every frame is written to its own `<dir>.tmp-<epoch>` at the same
+    *     time, one thread per output; the threads end with the call and
+    *     inherit the caller's job group and local properties.
+    *  1. Only after every write has succeeded are the stagings renamed
+    *     into place, in the order given. The last output's rename is the
+    *     call's commit point: a caller puts the table that records the
+    *     commit (the marked feed) last.
+    *
+    * A write may read a target's live directory; none is renamed before
+    * every write has finished. When a write fails, the sibling writes'
+    * jobs are cancelled through a job tag of this call (the caller's job
+    * group keeps working), the call waits for them to stop, deletes every
+    * staging and rethrows the first error: no target changes. A dry run
+    * writes everything, then deletes the stagings.
+    *
+    * Crash safety (single writer per table): between `rename(dst→bak)`
+    * and `rename(tmp→dst)` there is an instant with no live directory.
+    * Every entry point ([[openSnapshot]], and snapshotSwap itself before
+    * it starts) runs [[recoverSwap]], which rolls a stranded `.bak-*`
+    * back into place — the rename-back is one atomic metadata op, so a
+    * crashed swap behaves like the reference's rolled-back transaction:
+    * the old snapshot stays live, the orphaned `.tmp-*` is swept. A
+    * rename that reports failure throws an `IOException` naming both
+    * paths, before the backup is deleted; the targets before it in the
+    * order are already swapped in, the ones after it are not.
     */
-  def snapshotSwap(df: DataFrame, dir: String, dryRun: Boolean = false): Unit = {
-    val tmp = s"$dir.tmp-${System.currentTimeMillis()}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    if (!dryRun) recoverSwap(fs, dir)
-    df.write.mode("overwrite").parquet(tmp)
-    if (dryRun) {
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      ()
-    } else {
-      val dst = new org.apache.hadoop.fs.Path(dir)
-      val bak = new org.apache.hadoop.fs.Path(s"$dir.bak-${System.currentTimeMillis()}")
-      val staged = new org.apache.hadoop.fs.Path(tmp)
-      if (fs.exists(dst) && !fs.rename(dst, bak))
-        throw new java.io.IOException(s"snapshotSwap: could not rename $dst to $bak")
-      // the backup stays put when the second rename fails: recoverSwap
-      // rolls it back on the next read or swap
-      if (!fs.rename(staged, dst))
-        throw new java.io.IOException(s"snapshotSwap: could not rename $staged to $dst")
-      if (fs.exists(bak)) fs.delete(bak, true)
-      ()
+  def snapshotSwap(outputs: Seq[(DataFrame, String)], dryRun: Boolean): Unit = {
+    import org.apache.hadoop.fs.Path
+    require(outputs.map(_._2).distinct.size == outputs.size,
+      s"snapshotSwap: a target appears twice in ${outputs.map(_._2)}")
+    if (outputs.nonEmpty) {
+      val sc = outputs.head._1.sparkSession.sparkContext
+      val fs = org.apache.hadoop.fs.FileSystem.get(sc.hadoopConfiguration)
+      if (!dryRun) outputs.foreach { case (_, dir) => recoverSwap(fs, dir) }
+
+      val stamp = System.currentTimeMillis()
+      val staged = outputs.map { case (df, dir) => (df, dir, s"$dir.tmp-$stamp") }
+      val tag = s"graft-snapshot-swap-${java.util.UUID.randomUUID()}"
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val writers = staged.map { case (df, _, tmp) =>
+        val t = new Thread(() =>
+          try {
+            sc.addJobTag(tag)
+            df.write.mode("overwrite").parquet(tmp)
+          } catch {
+            case e: Throwable =>
+              if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
+          }, s"snapshot-write-${new Path(tmp).getName}")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      // a sibling between two of its jobs when the first cancel came
+      // submits the next one afterwards: cancel again until all stopped
+      writers.foreach { t =>
+        while ({ t.join(50); t.isAlive })
+          if (failure.get != null) sc.cancelJobsWithTag(tag)
+      }
+
+      val error = Option(failure.get)
+      if (dryRun || error.isDefined) {
+        staged.foreach { case (_, _, tmp) => fs.delete(new Path(tmp), true) }
+        error.foreach(e => throw e)
+      } else staged.foreach { case (_, dir, tmp) =>
+        val dst = new Path(dir)
+        val bak = new Path(s"$dir.bak-${System.currentTimeMillis()}")
+        if (fs.exists(dst) && !fs.rename(dst, bak))
+          throw new java.io.IOException(s"snapshotSwap: could not rename $dst to $bak")
+        // the backup stays put when the second rename fails: recoverSwap
+        // rolls it back on the next read or swap
+        if (!fs.rename(new Path(tmp), dst))
+          throw new java.io.IOException(s"snapshotSwap: could not rename $tmp to $dst")
+        if (fs.exists(bak)) fs.delete(bak, true)
+      }
     }
   }
 

@@ -304,16 +304,20 @@ object Sampling {
     * engine-portable; changing `salt` redraws the negatives.
     *
     * Scale shape: dense indices and N come from [[OrderedPrefix.sums]]
-    * over id buckets (no global row_number); the only corpus-sized
-    * shuffle is the final equi-join of (anchor, target-index) against
-    * the index frame, which is exactly the join any gather-by-index
-    * pays. No RNG state, no driver involvement.
+    * over id buckets (no global row_number), and that frame is read
+    * once. Each of its rows becomes the node at its own index plus the
+    * anchor of its k draws; one shuffle by index puts every draw next to
+    * the one node it hits, and a window over that index gathers the
+    * partner. A join of the draws against the index frame would read the
+    * frame, and so run its corpus-sized rank window, a second time. No
+    * RNG state, no driver involvement.
     *
     * Output: idCol (anchor), j (0-based draw), neg_<idCol> (partner).
     */
   def negativePairs(
       df: DataFrame, idCol: String, k: Int,
       salt: String = "graft"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     require(k > 0)
     val idx = OrderedPrefix.sums(df.select(col(idCol)),
         OrderedPrefix.idBucket(col(idCol)), Seq(col(idCol)),
@@ -321,13 +325,14 @@ object Sampling {
     val raw = keyHash60(
       concat(col(idCol).cast("string"), lit(":"), col("j").cast("string")),
       salt) % (col("_i_total") - 1)
-    val targets = idx
-      .select(col(idCol), col("_i"), col("_i_total"),
-        explode(sequence(lit(0), lit(k - 1))).as("j"))
-      .withColumn("_t",
-        when(raw >= col("_i"), raw + 1).otherwise(raw))
-    targets.join(idx.select(col(idCol).as("_nid"), col("_i").as("_t")),
-        Seq("_t"))
+    // j = -1 is the row's own node at index _i; j >= 0 are its draws
+    idx.select(col(idCol), col("_i"), col("_i_total"),
+        explode(sequence(lit(-1), lit(k - 1))).as("j"))
+      .withColumn("_t", when(col("j") < 0, col("_i"))
+        .when(raw >= col("_i"), raw + 1).otherwise(raw))
+      .withColumn("_nid",
+        max(when(col("j") < 0, col(idCol))).over(Window.partitionBy("_t")))
+      .filter(col("j") >= 0)
       .select(col(idCol), col("j").cast("long").as("j"),
         col("_nid").as("neg_" + idCol))
   }

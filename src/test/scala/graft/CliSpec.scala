@@ -98,6 +98,53 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(left.isEmpty, left)
   }
 
+  test("a failed etl-fhir cycle swaps nothing in and leaves the feed " +
+      "unmarked; its re-run matches a clean cycle") {
+    val root = tmp()
+    val nd = root + "/a.ndjson"
+    Files.writeString(java.nio.file.Path.of(nd),
+      bundle + "\n" + malformed + "\n" + bundle + "\n")
+    val Seq(cleanFeed, feed) = Seq("clean", "fhir").map(n => s"$root/$n")
+    Cli.receive(spark, cleanFeed, nd)
+    // the same documents and ids with `received` stored as text: no delta
+    // reads that column, so all seven deltas are written, and the marked
+    // feed's write, the last output, fails while its job runs
+    spark.read.parquet(cleanFeed)
+      .withColumn("received", col("received").cast("string"))
+      .write.parquet(feed)
+    Cli.etlFhir(spark, cleanFeed, "-", "-", root + "/clean-delta", dryRun = false)
+
+    val outDir = root + "/delta"
+    intercept[Exception](
+      Cli.etlFhir(spark, feed, "-", "-", outDir, dryRun = false))
+    // the stagings' parent directory stays, empty
+    val swapped = Option(new java.io.File(outDir).list()).toSeq.flatten
+    assert(swapped.isEmpty, swapped)
+    assert(spark.read.parquet(feed)
+      .filter(size(col("processing_log")) > 0).count() == 0)
+    val left = new java.io.File(root).list().toSeq
+      .filter(n => n.contains(".bak-") || n.contains(".tmp-"))
+    assert(left.isEmpty, left)
+
+    graft.operators.Receiving.snapshotSwap(spark.read.parquet(feed)
+      .withColumn("received", col("received").cast("timestamp")), feed)
+    Cli.etlFhir(spark, feed, "-", "-", outDir, dryRun = false)
+    def rows(dir: String) =
+      spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    Seq("sites", "individuals", "encounters", "sample_updates", "targets",
+      "presence_absence", "statuses").foreach { t =>
+      assert(rows(s"$outDir/$t") == rows(s"$root/clean-delta/$t"), t)
+    }
+    def marks(f: String) = spark.read.parquet(f)
+      .select(col("id"), filter(col("processing_log"), l =>
+        l.getField("etl") === "fhir" && l.getField("revision") === 5)
+        .getField("status").as("st"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(marks(feed) == Map(1L -> Seq("processed"), 2L -> Seq("skipped"),
+      3L -> Seq("processed")), marks(feed))
+    assert(marks(feed) == marks(cleanFeed))
+  }
+
   test("one committed etl-fhir cycle runs at most 23 Spark jobs") {
     import spark.implicits._
     val feedDir = tmp() + "/fhir"

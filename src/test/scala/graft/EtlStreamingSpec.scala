@@ -212,6 +212,81 @@ class EtlStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Seq("bak-1", "bak-2").forall(b => new java.io.File(s"$dir.$b").isDirectory))
   }
 
+  test("snapshotSwap swaps nothing in when one staged write fails") {
+    import spark.implicits._
+    val schema = Seq((0L, "")).toDF("id", "v").schema
+    val base = Files.createTempDirectory("graft_swap").toString
+    val Seq(a, b, c) = Seq("a", "b", "c").map(n => s"$base/$n")
+    Seq(a, b, c).foreach(Receiving.snapshotSwap(Seq((1L, "old")).toDF("id", "v"), _))
+    // throws while its job runs, not while it is planned
+    val failing = spark.range(4).select(
+      when(col("id") === 2, raise_error(lit("boom"))).otherwise(col("id")).as("id"),
+      lit("new").as("v"))
+    // runs for minutes unless its job is cancelled
+    val nap = udf((x: Long) => { Thread.sleep(1); x })
+    val slow = spark.range(0, 200000, 1, 2).select(nap(col("id")).as("id"),
+      lit("new").as("v"))
+    val t0 = System.nanoTime()
+    val e = intercept[Exception](Receiving.snapshotSwap(
+      Seq(Seq((2L, "new")).toDF("id", "v") -> a, failing -> b, slow -> c),
+      dryRun = false))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    assert((System.nanoTime() - t0) / 1e9 < 60, "the slow sibling was not cancelled")
+    // job-end events reach the status tracker asynchronously; a sibling
+    // still running would stay active for minutes
+    val settled = System.nanoTime() + 10000000000L
+    while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty &&
+        System.nanoTime() < settled) Thread.sleep(50)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    Seq(a, b, c).foreach { d =>
+      assert(Receiving.openSnapshot(spark, d, schema).get.collect()
+        .map(_.getString(1)).toSeq == Seq("old"), d)
+    }
+    val left = new java.io.File(base).list().toSeq
+      .filter(n => n.contains(".bak-") || n.contains(".tmp-"))
+    assert(left.isEmpty, left)
+  }
+
+  test("a dry-run snapshotSwap leaves every target untouched") {
+    import spark.implicits._
+    val schema = Seq((0L, "")).toDF("id", "v").schema
+    val base = Files.createTempDirectory("graft_swap").toString
+    val Seq(a, b, fresh) = Seq("a", "b", "fresh").map(n => s"$base/$n")
+    Seq(a, b).foreach(Receiving.snapshotSwap(Seq((1L, "old")).toDF("id", "v"), _))
+    val df = Seq((2L, "new")).toDF("id", "v")
+    Receiving.snapshotSwap(Seq(df -> a, df -> b, df -> fresh), dryRun = true)
+    Seq(a, b).foreach { d =>
+      assert(Receiving.openSnapshot(spark, d, schema).get.collect()
+        .map(_.getString(1)).toSeq == Seq("old"), d)
+    }
+    assert(Receiving.openSnapshot(spark, fresh, schema).isEmpty)
+    assert(new java.io.File(base).list().toSet == Set("a", "b"))
+  }
+
+  test("snapshotSwap renames its outputs into place in the order given") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_swap").toString
+    val order = Seq("c", "a", "b").map(n => s"$base/$n")
+    Receiving.snapshotSwap(Seq((1L, "old")).toDF("id", "v"), order(1))
+    // the first output's write finishes last
+    val nap = udf((x: Long) => { Thread.sleep(5); x })
+    val slow = spark.range(0, 200, 1, 1).select(nap(col("id")).as("id"))
+    val fast = Seq(1L).toDF("id")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[RenameLoggingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    RenameLoggingFs.log.clear()
+    try Receiving.snapshotSwap(Seq(slow -> order(0), fast -> order(1),
+      fast -> order(2)), dryRun = false)
+    finally {
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    val swapped = RenameLoggingFs.log.toArray.toSeq.filter(order.contains)
+    assert(swapped == order, swapped)
+    assert(spark.read.parquet(order(0)).count() == 200)
+  }
+
   test("Etl.upsertSamples same-batch same-key updates fold deterministically") {
     import spark.implicits._
     val cur = Seq((1L, "A1", "C1", """{"x":0}"""))
@@ -849,4 +924,17 @@ object CrashFlag {
       throw new IllegalStateException("injected mid-stream crash")
     s
   }
+}
+
+/** The local filesystem, logging the target path of every rename. */
+class RenameLoggingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    RenameLoggingFs.log.add(dst.toUri.getPath)
+    super.rename(src, dst)
+  }
+}
+
+object RenameLoggingFs {
+  val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -185,8 +185,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q100 negative pairs: no cartesian beyond the broadcast scalar") {
     val p = plan("q100_negative_pairs")
-    // N is one broadcast row; the gather is an equi-join on the dense
-    // index — a real cartesian/NL join here would be quadratic at scale
+    // N is one broadcast row; the partner gather is a max over a window
+    // partitioned by the target index, with no join on the dense index —
+    // a real cartesian/NL join here would be quadratic at scale
     assert(!p.contains("CartesianProduct"), "corpus-sized cartesian")
     assert("windowspecdefinition\\(_b#".r.findFirstIn(p).isDefined,
       "ordinal window lost its bucket partitioning")
